@@ -65,7 +65,10 @@ def asof_join(
         F.lit(1).alias("__side"),
         F.lit(None).cast(struct_t).alias("__asof"),
     )
-    r_side = right.select(
+    # a NULL right_time is no time at all: under the ascending order it
+    # would sort first and attach to every earlier left row, a match
+    # ``right_time <= left_time`` never makes — drop those rows
+    r_side = right.filter(F.col(right_time).isNotNull()).select(
         *[
             F.lit(None).cast(left.schema[c].dataType).alias(c)
             if c not in keys
@@ -86,10 +89,14 @@ def asof_join(
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     u = u.withColumn("__asof", F.last("__asof", ignorenulls=True).over(w))
+    # a NULL left_time matches nothing (asof_join_forward's gate)
+    nn_left = F.col(left_time).isNotNull()
     return u.filter(F.col("__side") == 1).select(
         *lcols,
-        F.col(f"__asof.{right_time}").alias(f"{prefix}{right_time}"),
-        *[F.col(f"__asof.{c}").alias(f"{prefix}{c}") for c in payload],
+        *[
+            F.when(nn_left, F.col(f"__asof.{c}")).alias(f"{prefix}{c}")
+            for c in [right_time, *payload]
+        ],
     )
 
 

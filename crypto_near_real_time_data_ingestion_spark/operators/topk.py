@@ -75,27 +75,22 @@ def _partial_trim(
                     use_na_sentinel=False
                 )[0]
             order = pdf[order_col].to_numpy()
-            # NULL/NaN order values must SURVIVE the trim untouched: at
-            # the Arrow boundary Spark NULL and NaN BOTH arrive as NaN,
-            # but they rank differently JVM-side (desc: NaN first, NULL
-            # last; asc: NULL first, NaN last) — no in-kernel mapping
-            # can be exact for both, so the trim keeps every NaN row
-            # (conservative superset; the final window is the
-            # authority) and ranks only the definite values among
-            # themselves (r5 review; pinned in test_topk)
-            nan_mask = None
-            if np.issubdtype(order.dtype, np.floating) and np.isnan(order).any():
-                nan_mask = np.isnan(order)
-                # park NaNs at the DROPPED extreme so they never
-                # displace a definite value from the kept top-k
-                order = np.where(nan_mask, np.inf if ascending else -np.inf, order)
+            # a NaN here is always a JVM NULL: _nan_to_null turned every
+            # true NaN score into NULL upstream, and Arrow hands NULLs to
+            # pandas as NaN. So rank them with Spark's null placement —
+            # first ascending, last descending — tiebroken like any
+            # other value, and the k-per-key bound holds for them too
+            null = np.zeros(len(order), dtype=bool)
+            if np.issubdtype(order.dtype, np.floating):
+                null = np.isnan(order)
+                order = np.where(null, 0.0, order)
             tb = pdf[tiebreak].to_numpy()
+            # lexsort is ascending-only: sort by (gid, null placement,
+            # order in the requested direction, tiebreak asc)
             if not ascending:
-                # lexsort is ascending-only; negate via argsort keys trick:
-                # sort by (gid asc, order desc, tiebreak asc)
-                idx = np.lexsort((tb, -order, gid))
+                idx = np.lexsort((tb, -order, null, gid))
             else:
-                idx = np.lexsort((tb, order, gid))
+                idx = np.lexsort((tb, order, ~null, gid))
             g_sorted = gid[idx]
             # rank within group = position - first position of the group
             new_grp = np.empty(len(g_sorted), dtype=bool)
@@ -105,10 +100,7 @@ def _partial_trim(
                 np.where(new_grp, np.arange(len(g_sorted)), 0)
             )
             keep = (np.arange(len(g_sorted)) - starts) < k
-            rows = idx[keep]
-            if nan_mask is not None:
-                rows = np.union1d(rows, np.flatnonzero(nan_mask))
-            yield pdf.iloc[np.sort(rows)]
+            yield pdf.iloc[np.sort(idx[keep])]
 
     return fn
 

@@ -29,6 +29,21 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every nested ``containsNull`` / ``valueContainsNull`` /
+    field ``nullable`` set — the physical type, nullability aside."""
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_nullable(f.dataType), True) for f in dt.fields]
+        )
+    return dt
 
 
 class ParquetMergeSink:
@@ -88,9 +103,10 @@ class ParquetMergeSink:
 
     def _bind_schema(self, schema) -> None:
         """Widen the stored schema with this batch's (additive-only) or
-        refuse a breaking change."""
-        from pyspark.sql import types as T
-
+        refuse a breaking change. Nullability is not part of a column's
+        type here: an upstream plan change can flip a nested
+        ``containsNull`` / field ``nullable`` over the same physical type,
+        and parquet reads bind the schema as nullable anyway."""
         stored = self._stored_schema()
         if stored is not None:
             new_by_name = {f.name: f for f in schema.fields}
@@ -103,7 +119,7 @@ class ParquetMergeSink:
                         f"missing from this batch ({self.table_dir}); "
                         "dropping a column needs a table rewrite"
                     )
-                if g.dataType != f.dataType:
+                if _as_nullable(g.dataType) != _as_nullable(f.dataType):
                     raise ValueError(
                         f"schema evolution is additive-only: column "
                         f"{f.name!r} changed type {f.dataType} -> "
@@ -126,6 +142,11 @@ class ParquetMergeSink:
         """The ``foreachBatch`` handler. Idempotent: replaying a committed
         batch is a no-op; a torn write is overwritten at the same path."""
         if self.is_committed(batch_id):
+            # a crash after this sink's marker but before the checkpoint
+            # commit replays the batch: the plan must still run, or its
+            # state stores never commit the batch and Spark fails the
+            # query (STATE_STORE_COMMIT_VALIDATION_FAILED)
+            df.write.format("noop").mode("overwrite").save()
             return
         self._bind_schema(df.schema)
         out = os.path.join(self.data_dir, f"batch-{batch_id:08d}")

@@ -47,7 +47,15 @@ from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessorHandle,
 )
 
-from .stateful import _EMPTY, _rows_to_pdf, _step, GAP_S_DEFAULT, OUTPUT_SCHEMA
+from .stateful import (
+    _EMPTY,
+    _columns,
+    _input_frame,
+    _out_frame,
+    _step,
+    GAP_S_DEFAULT,
+    OUTPUT_SCHEMA,
+)
 
 
 # default google-cloud-sdk bundle location; override with
@@ -178,8 +186,8 @@ class ConvFeaturesProcessor(StatefulProcessor):
         (conv_id,) = key
         wm_us = timer_values.getCurrentWatermarkInMs() * 1000
         st, old_timer = self._load()
-        out_rows, new_state, timer = _step(
-            conv_id, pdf_iter, st, wm_us, self.gap_s
+        out, new_state, timer = _step(
+            conv_id, *_columns(_input_frame(pdf_iter)), st, wm_us, self.gap_s
         )
         if expired_timer_ms is not None and old_timer == expired_timer_ms:
             # the firing timer is consumed by the engine — never delete
@@ -189,8 +197,8 @@ class ConvFeaturesProcessor(StatefulProcessor):
             self._store(new_state, timer, old_timer)
         else:
             self._clear(old_timer)
-        if out_rows:
-            yield _rows_to_pdf(out_rows)
+        if len(out[1]):
+            yield _out_frame([out])
 
     # -- TWS hooks ----------------------------------------------------------
 

@@ -108,6 +108,34 @@ def test_fold_crash_between_sinks_is_exactly_once(
     )
 
 
+def test_crash_before_checkpoint_commit_replays(
+    spark, transcripts_parquet, stream_parquet_dir
+):
+    """Crash point "checkpoint commit": the sink committed the last batch
+    but the query's commit log did not. The restart replays that batch
+    through the stateful dedup — it must drain (the replay still runs
+    the plan so the state stores commit) and leave silver unchanged."""
+    work = WORK + "_ckpt_commit"
+    shutil.rmtree(work, ignore_errors=True)
+    fsrc = build_flushed_source(stream_parquet_dir, os.path.join(work, "source"))
+    run_pipeline_to_completion(
+        spark, fsrc, work, queries=("silver",), max_files_per_trigger=4
+    )
+    commits = os.path.join(work, "checkpoints", "silver", "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    os.remove(os.path.join(commits, str(last)))
+    os.remove(os.path.join(commits, f".{last}.crc"))
+    h = run_pipeline_to_completion(
+        spark, fsrc, work, queries=("silver",), max_files_per_trigger=4
+    )
+    assert os.path.exists(os.path.join(commits, str(last)))
+    got = h.sinks["silver"].read(spark).filter(F.col("conv_id") != FLUSH_CONV_ID)
+    want = silver_batch(read_transcripts(spark, transcripts_parquet))
+    assert_df_equal(
+        got, want.toPandas(), sort_cols=["conv_id", "turn_idx"]
+    )
+
+
 def test_topology_switch_on_existing_work_dir_refuses(spark):
     """Restarting a work_dir with a different fold topology must be a
     LOUD error, not silent data loss: a folded heavy_hitters sink holds

@@ -203,6 +203,35 @@ def test_asof_join_edge_semantics(spark):
     assert got[3] == (None, None)    # no right row for key b
 
 
+def test_asof_join_null_times(spark):
+    """A right row with NULL time never matches (it must not attach to
+    left rows before the first real right row), and a left row with
+    NULL time attaches nothing."""
+    import datetime as dt
+
+    from crypto_near_real_time_data_ingestion_spark.operators.asof import asof_join
+
+    t = lambda s: dt.datetime(2025, 1, 1, 0, 0, s)  # noqa: E731
+    left = spark.createDataFrame(
+        [("a", t(2), 1), ("a", t(10), 2), ("a", None, 3), ("b", t(4), 4)],
+        "k string, ts timestamp, row_id int",
+    )
+    right = spark.createDataFrame(
+        [("a", None, -1.0), ("a", t(5), 100.0), ("b", None, -2.0)],
+        "k string, rt timestamp, v double",
+    )
+    got = {
+        r["row_id"]: (r["asof_rt"], r["asof_v"])
+        for r in asof_join(left, right, ["k"], "ts", "rt", ["v"]).collect()
+    }
+    assert got == {
+        1: (None, None),  # before the first real right row
+        2: (t(5), 100.0),
+        3: (None, None),  # NULL left time
+        4: (None, None),  # only a NULL-time right row
+    }
+
+
 def test_daily_users_sketch_error_bound(spark):
     """HLL++ twin: approximate distinct within 5*rsd of exact on every
     day (rsd=0.01 ⇒ registers large vs this cardinality — near-exact)."""

@@ -62,6 +62,36 @@ def test_type_change_refused(spark, sink):
         sink.process_batch(_df(spark, [(2, 7)], ["k", "v"]), 1)
 
 
+def test_nested_nullability_drift_accepted(spark, sink):
+    """Same physical type, only nested nullability flipped (array
+    containsNull, struct field nullable): a live batch must still
+    commit, and a real nested type change is still refused."""
+    base = spark.range(1).select(F.col("id").alias("k"))
+    strict = base.select(
+        "k",
+        F.array(F.lit(1)).alias("xs"),
+        F.struct(F.lit(1).alias("a")).alias("s"),
+    )
+    loose = base.select(
+        (F.col("k") + 1).alias("k"),
+        F.array(F.lit(2), F.lit(None).cast("int")).alias("xs"),
+        F.struct(F.lit(None).cast("int").alias("a")).alias("s"),
+    )
+    assert strict.schema["xs"].dataType != loose.schema["xs"].dataType
+    assert strict.schema["s"].dataType != loose.schema["s"].dataType
+    sink.process_batch(strict, 0)
+    sink.process_batch(loose, 1)
+    got = [r.asDict(recursive=True) for r in sink.read(spark).orderBy("k").collect()]
+    assert [(r["xs"], r["s"]["a"]) for r in got] == [([1], 1), ([2, None], None)]
+    retyped = base.select(
+        (F.col("k") + 2).alias("k"),
+        F.array(F.lit("x")).alias("xs"),
+        F.struct(F.lit(1).alias("a")).alias("s"),
+    )
+    with pytest.raises(ValueError, match="additive-only.*'xs'.*changed type"):
+        sink.process_batch(retyped, 2)
+
+
 def test_evolution_survives_compaction_and_time_travel(spark, sink):
     """The widened schema holds through compact (snapshot + GC) and
     read_as_of: pre-addition versions travel with NULL in the new

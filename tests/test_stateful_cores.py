@@ -30,7 +30,12 @@ from crypto_near_real_time_data_ingestion_spark.streaming.stateful_asof import (
 from crypto_near_real_time_data_ingestion_spark.streaming.stateful import (
     _EMPTY as FEAT_EMPTY,
 )
-from crypto_near_real_time_data_ingestion_spark.streaming.stateful import _step
+from crypto_near_real_time_data_ingestion_spark.streaming.stateful import (
+    _columns,
+    _input_frame,
+    _process_bucket,
+    _step,
+)
 from crypto_near_real_time_data_ingestion_spark.streaming.stateful_runs import (
     _EMPTY as RUNS_EMPTY,
 )
@@ -244,15 +249,15 @@ def _drive_features(batches):
             continue
         o, st_, _ = _step(
             "c",
-            iter([_pdf(batch)]),
+            *_columns(_input_frame(iter([_pdf(batch)]))),
             st_ if st_ is not None else FEAT_EMPTY,
             wm,
             FEAT_GAP_S,
         )
-        rows_out.extend(o)
+        rows_out.extend(zip(*o))
     if st_ is not None:
-        o, st_, _ = _step("c", iter([]), st_, FAR, FEAT_GAP_S)
-        rows_out.extend(o)
+        o, st_, _ = _step("c", *_columns(None), st_, FAR, FEAT_GAP_S)
+        rows_out.extend(zip(*o))
         assert st_ is None, "state must evict once the watermark passes"
     return sorted(
         (ti, ts, c, mti, rate, _nn(p50), _nn(p95), _nn(p99), roll, sid, ss)
@@ -303,3 +308,161 @@ def _brute_features(rows):
 def test_features_core_matches_brute_force(case):
     rows, batches = _scaled(case)
     assert _drive_features(batches) == _brute_features(rows)
+
+
+# --- bucketed conv-features operator (stateful._process_bucket): several
+# conversations share ONE Spark state key. Driven through a fake
+# GroupState with Spark's EventTimeTimeout bookkeeping, it must give
+# every conversation exactly the _step calls a per-conversation key gets
+# under Spark's firing rule (data in the batch, or timer < watermark) —
+# same output rows, same per-conversation state, same timers.
+
+
+class _FakeGroupState:
+    """The GroupState surface the bucket function uses. Like Spark, the
+    timeout is not carried into a call: the function re-arms it or the
+    key loses its timer."""
+
+    def __init__(self):
+        self.value, self.timeout, self.wm_ms = None, None, None
+
+    def begin(self, wm_ms):
+        self.wm_ms, self.timeout = wm_ms, None
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return tuple(self.value)
+
+    def getCurrentWatermarkMs(self):
+        return self.wm_ms
+
+    def update(self, value):
+        self.value = tuple(value)
+
+    def remove(self):
+        self.value = None
+
+    def setTimeoutTimestamp(self, ms):
+        assert ms >= self.wm_ms, "Spark refuses a timeout older than the watermark"
+        self.timeout = ms
+
+
+def _bucket_pdf(batch):
+    d = pd.DataFrame(batch, columns=["conv_id", "turn_idx", "ts", "role", "tool"])
+    d["tool"] = d["tool"].replace("", None)
+    d["ts"] = pd.to_datetime(d["ts"], unit="us")
+    return d[["conv_id", "turn_idx", "tool", "ts"]]
+
+
+def _norm_rows(rows):
+    return sorted(tuple(_nn(v) for v in r) for r in rows)
+
+
+def _frame_rows(pdf):
+    pdf = pdf.copy()
+    for c in ("as_of_ts", "session_start"):
+        pdf[c] = pdf[c].astype("datetime64[us]").astype("int64")
+    return list(pdf.itertuples(index=False, name=None))
+
+
+def _drive_bucket_vs_per_conv(batches, wms):
+    """Run the same conversation-tagged batches through one bucket and
+    through per-conversation ``_step`` keys; assert they agree after
+    every batch. Returns the per-batch {conv: timer_ms} of the bucket."""
+    state, bucket_timer = _FakeGroupState(), None
+    ref: dict = {}  # conv → (state tuple, timer_ms)
+    timers_seen = []
+    for batch, wm in zip(batches, wms):
+        wm_ms = wm // 1000
+        # per-conversation keys, Spark's rule: rows, or timer < watermark
+        want = []
+        convs_with_rows = list(dict.fromkeys(r[0] for r in batch))
+        due = [c for c, (_, t) in ref.items() if c not in convs_with_rows and t < wm_ms]
+        for c in convs_with_rows + due:
+            rows = [r[1:] for r in batch if r[0] == c]
+            cols = _columns(_input_frame(iter([_pdf(rows)]))) if rows else _columns(None)
+            st_ = ref[c][0] if c in ref else FEAT_EMPTY
+            o, new_st, timer = _step(c, *cols, st_, wm, FEAT_GAP_S)
+            want.extend(zip(*o))
+            if new_st is None:
+                ref.pop(c, None)
+            else:
+                ref[c] = (new_st, timer)
+        # one bucket key: called on rows, or when its timer fires
+        got = []
+        fire = state.exists and bucket_timer is not None and bucket_timer < wm_ms
+        if batch or fire:
+            state.begin(wm_ms)
+            pdfs = iter([_bucket_pdf(batch)] if batch else [])
+            for out in _process_bucket(("b",), pdfs, state, FEAT_GAP_S):
+                got.extend(_frame_rows(out))
+            bucket_timer = state.timeout
+        assert _norm_rows(got) == _norm_rows(want)
+        have = {}
+        if state.exists:
+            ids, *fields, timers = state.get
+            have = {
+                c: (tuple(f[i] for f in fields), timers[i]) for i, c in enumerate(ids)
+            }
+            assert bucket_timer == min(timers)
+        assert have == ref
+        timers_seen.append({c: t for c, (_, t) in have.items()})
+    assert not state.exists and not ref, "every conversation must evict"
+    return timers_seen
+
+
+def _tagged_batches(cases, perm_seed):
+    """Merge per-conversation batch lists into shared batches (batch i of
+    every conversation lands in merged batch i, interleaved)."""
+    rng = np.random.default_rng(perm_seed)
+    n = max(len(b) for _, b in cases)
+    merged = []
+    for i in range(n):
+        rows = [
+            (f"c{j}", *r)
+            for j, (_, b) in enumerate(cases)
+            if i < len(b)
+            for r in b[i]
+        ]
+        merged.append([rows[p] for p in rng.permutation(len(rows))])
+    return merged
+
+
+@settings(max_examples=80, deadline=None)
+@given(
+    st.lists(_turn_history(), min_size=2, max_size=4),
+    st.integers(min_value=0, max_value=2**16),
+)
+def test_bucket_matches_per_conversation_keys(cases, perm_seed):
+    merged = _tagged_batches([_scaled(c) for c in cases], perm_seed)
+    wms = _wm_schedule([[r[1:] for r in b] for b in merged])
+    _drive_bucket_vs_per_conv(merged + [[]], wms + [FAR])
+
+
+def test_bucket_timer_tie_and_revival():
+    """Planted: conversation A's own timer equals the watermark exactly
+    (it must NOT run: Spark fires only on timer < watermark), then fires
+    one batch later and evicts A, then a new A turn revives it with
+    fresh lifetime aggregates — while B's rows drive the watermark."""
+    m = 60 * US
+    batches = [
+        [("A", 0, 2 * m, "user", ""), ("B", 0, 2 * m, "user", "")],
+        [("B", 1, 3 * m, "assistant", "search")],
+        [("B", 2, 8 * m, "user", "")],
+        [("B", 3, 9 * m, "assistant", "")],
+        [("A", 1, 10 * m, "user", "")],
+        [],
+    ]
+    wms = [2 * m, 3 * m, 8 * m, 9 * m, 10 * m, FAR]
+    timers = _drive_bucket_vs_per_conv(batches, wms)
+    # A emitted at batch 2 and armed its eviction timer at last + 2*gap
+    a_timer = (2 * m + 2 * FEAT_GAP_S * US) // 1000
+    assert a_timer == wms[2] // 1000
+    assert timers[1]["A"] == a_timer
+    assert timers[2]["A"] == a_timer  # tie: left alone, not re-armed
+    assert "A" not in timers[3]  # fired below the watermark: evicted
+    assert "A" in timers[4]  # revived by its new turn

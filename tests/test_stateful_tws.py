@@ -24,6 +24,8 @@ from crypto_near_real_time_data_ingestion_spark.streaming.engine import (
 )
 from crypto_near_real_time_data_ingestion_spark.streaming.stateful import (
     _EMPTY,
+    _columns,
+    _input_frame,
     _step,
 )
 from crypto_near_real_time_data_ingestion_spark.streaming.stateful_tws import (
@@ -62,14 +64,22 @@ def _batch(ti_ts_tool):
     )
 
 
+def _rows_step(conv_id, pdf_iter, st, wm_us, gap_s):
+    """``_step`` over an input-chunk iterator, output as row tuples."""
+    out, new_st, timer = _step(
+        conv_id, *_columns(_input_frame(pdf_iter)), st, wm_us, gap_s
+    )
+    return list(zip(*out)), new_st, timer
+
+
 def test_step_core_buffers_until_watermark():
     """The shared `_step` core (both stateful backends): rows past the
     watermark stay buffered with a wake-up timer; nothing is emitted."""
-    out, st, timer = _step("c", _batch([(0, 10_000_000, None)]), _EMPTY, 0, 1800)
+    out, st, timer = _rows_step("c", _batch([(0, 10_000_000, None)]), _EMPTY, 0, 1800)
     assert out == [] and st is not None
     assert timer == 10_000 + 1  # earliest buffered turn, ms
     # watermark passes → emit in order, dedup against emitted set
-    out2, st2, _ = _step(
+    out2, st2, _ = _rows_step(
         "c", _batch([(0, 10_000_000, None), (1, 20_000_000, "grep")]), st,
         25_000_000, 1800,
     )
@@ -79,9 +89,9 @@ def test_step_core_buffers_until_watermark():
 
 def test_step_core_eviction():
     """Watermark far past last activity → state evicted (None)."""
-    out, st, _ = _step("c", _batch([(0, 1_000_000, None)]), _EMPTY, 2_000_000, 1800)
+    out, st, _ = _rows_step("c", _batch([(0, 1_000_000, None)]), _EMPTY, 2_000_000, 1800)
     assert len(out) == 1
-    _, st2, timer = _step("c", iter(()), st, 2_000_000 + 2 * 1800 * 1_000_000 + 1, 1800)
+    _, st2, timer = _rows_step("c", iter(()), st, 2_000_000 + 2 * 1800 * 1_000_000 + 1, 1800)
     assert st2 is None and timer is None
 
 

@@ -87,6 +87,37 @@ def test_partial_trim_is_batch_local_topk():
     assert sorted(out["uid"]) == sorted(want["uid"])
 
 
+def test_partial_trim_null_heavy_keeps_k_per_key():
+    """NULL-heavy batch (NULL scores arrive as NaN): the trim still keeps
+    at most k rows per key, and exactly the batch-local top-k under
+    Spark's null placement (asc: NULLs first, desc: NULLs last)."""
+    rng = np.random.default_rng(2)
+    n = 1000
+    score = rng.integers(0, 10, n).astype(float)
+    score[rng.random(n) < 0.7] = np.nan
+    pdf = pd.DataFrame(
+        {
+            "key": rng.integers(0, 5, n).astype(str),
+            "score": score,
+            "uid": np.arange(n, dtype=np.int64),
+        }
+    )
+    for ascending in (False, True):
+        fn = _partial_trim(["key"], "score", 3, "uid", ascending=ascending)
+        (out,) = list(fn(iter([pdf])))
+        assert (out.groupby("key").size() <= 3).all()
+        want = (
+            pdf.sort_values(
+                ["score", "uid"],
+                ascending=[ascending, True],
+                na_position="first" if ascending else "last",
+            )
+            .groupby("key")
+            .head(3)
+        )
+        assert sorted(out["uid"]) == sorted(want["uid"])
+
+
 def test_topk_plan_trims_before_exchange(spark):
     """The MapInPandas trim must sit BELOW the Exchange feeding the window
     rank — that ordering IS the map-side-combine claim."""
@@ -163,10 +194,10 @@ def test_doc_weighted_sample_favors_weight(spark):
 
 def test_trim_keeps_nan_scores(spark):
     """NULL and true-NaN scores arrive in the trim kernel
-    indistinguishably (Arrow maps both to NaN) yet rank DIFFERENTLY
-    JVM-side (desc: NaN first, NULL last) — the trim therefore keeps
-    every such row and lets the final window rank them; pinned against
-    the naive twin for both kinds and both directions (r5 review)."""
+    indistinguishably (Arrow maps both to NaN); the family contract
+    normalizes NaN to NULL before the trim, which then ranks them with
+    Spark's null placement — pinned against the naive twin for both
+    kinds and both directions."""
     # NULLs (tuple-API None stays NULL)
     null_rows = [("g", None if uid < 3 else float(uid), uid) for uid in range(12)]
     # true NaNs (tuple-API float('nan') stays NaN, not NULL)
