@@ -16,4 +16,9 @@ Layout:
     streaming/  engine wiring: sinks (exactly-once MERGE), listener, lineage
 """
 
+import os as _os
+
 __version__ = "0.1.0"
+
+# the checkout holding the package: default root of the gitignored data/
+CHECKOUT_ROOT = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))

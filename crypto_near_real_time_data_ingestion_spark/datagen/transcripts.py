@@ -31,6 +31,8 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from .. import CHECKOUT_ROOT
+
 BASE_TS = np.datetime64("2025-01-01T00:00:00", "us")
 _VOCAB = np.array(
     [
@@ -200,7 +202,9 @@ def generate_transcripts(cfg: TranscriptConfig) -> pd.DataFrame:
 # materialization / caching
 # ---------------------------------------------------------------------------
 
-DATA_ROOT = os.environ.get("SPARK_GRAFT_DATA_ROOT", "/root/repo/data/transcripts")
+DATA_ROOT = os.environ.get(
+    "SPARK_GRAFT_DATA_ROOT", os.path.join(CHECKOUT_ROOT, "data", "transcripts")
+)
 
 _SF_TURNS = {0.001: 2_000, 0.01: 20_000, 0.1: 200_000}
 

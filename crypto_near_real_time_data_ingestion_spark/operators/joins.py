@@ -71,8 +71,8 @@ def user_response_pairs_stream(
     max_latency: str = DEFAULT_MAX_LATENCY,
 ) -> DataFrame:
     """Stream-stream inner join with watermarked, time-bounded state.
-    Input must already carry the chain's watermark (set once in the
-    silver stage); both join sides are references to that one stream."""
+    Input must already carry the gold layer's watermark (set once on its
+    silver read); both join sides are references to that one stream."""
     u = silver_stream.alias("u")
     r = silver_stream.alias("r")
     cond = (

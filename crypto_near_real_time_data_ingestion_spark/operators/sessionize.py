@@ -58,8 +58,8 @@ def sessionize_batch(silver: DataFrame, gap_s: int = DEFAULT_GAP_S) -> DataFrame
 
 def sessionize_stream(silver_stream: DataFrame, gap_s: int = DEFAULT_GAP_S) -> DataFrame:
     """Native streaming session windows (merge-on-overlap, watermark
-    eviction). Input must already carry the chain's watermark (set once in
-    the silver stage). ``session_window.end`` = last event ts + gap; the
+    eviction). Input must already carry the gold layer's watermark (set
+    once on its silver read). ``session_window.end`` = last event ts + gap; the
     selected ``session_end`` is the max event ts, directly comparable to
     the batch formulation.
     """

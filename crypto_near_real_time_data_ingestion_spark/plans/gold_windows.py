@@ -87,10 +87,9 @@ def conv_window_stats(silver: DataFrame, grain: str = "hour") -> DataFrame:
 
 def conv_window_stats_stream(silver_stream: DataFrame, grain: str = "hour") -> DataFrame:
     """Streaming: identical aggregation under the watermark already set
-    upstream by the silver stage (a chain defines its watermark exactly
-    once — Spark disallows redefinition across chained stateful
-    operators). Append mode emits each (window, conv_id) row once the
-    watermark passes window end."""
+    upstream on the gold layer's silver read (one watermark per layer).
+    Append mode emits each (window, conv_id) row once the watermark
+    passes window end."""
     win = F.window("ts", GRAINS[grain])
     return (
         silver_stream.groupBy(win.alias("w"), "conv_id")

@@ -106,7 +106,7 @@ def unanswered_user_turns_stream(
     (the outer join's null-side emission point) — i.e. the timeout fires
     only once no response can still arrive. State is bounded by the
     horizon, same argument as the pairs join. Input must already carry
-    the chain's watermark (set once in the silver stage)."""
+    the gold layer's watermark (set once on its silver read)."""
     u = silver_stream.alias("u")
     r = silver_stream.alias("r")
     cond = (

@@ -22,6 +22,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from . import CHECKOUT_ROOT
+
 # the box's own core count unless SPARK_GRAFT_CPUS pins it
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
@@ -63,7 +65,7 @@ def get_spark(
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get(
-                "SPARK_GRAFT_WAREHOUSE", "/root/repo/data/warehouse"
+                "SPARK_GRAFT_WAREHOUSE", os.path.join(CHECKOUT_ROOT, "data", "warehouse")
             ),
         )
         # streaming

@@ -78,7 +78,9 @@ def token_window_counts(
     DSIR / unigram scoring see."""
     from ..datagen.flush import FLUSH_CONV_ID
 
-    d = bdf.filter(F.col(text_col).isNotNull())
+    # a NULL event time belongs to no window: it is an absence, as in
+    # the sketch family (hll_windowed_build), not a NULL-keyed window
+    d = bdf.filter(F.col(text_col).isNotNull() & F.col("ts").isNotNull())
     if "conv_id" in bdf.columns:
         # sentinel rows must be excluded at WRITE time — an additive
         # sink cannot un-count them (the MG/CMS fold rule)

@@ -5,21 +5,30 @@ The reference's Step-Functions DAG of four sequential Glue jobs
 Structured Streaming queries, each checkpointed and resumable (SFN
 retry/backoff → restart-from-checkpoint). Data passes between layers
 through tables, exactly as the reference passes through S3 — but
-incrementally, per micro-batch. Fold exception: when the members of a
-shared-plan group are requested (silver+heavy_hitters+countmin,
-gold_hour+gold_hour_rank), the group runs as ONE query — one checkpoint,
-N sinks, each sink exactly-once via its own commit log.
+incrementally, per micro-batch:
 
-Queries:
+  bronze ──► silver ──► silver table ──► gold queries ──► gold tables
+  (files or the         (committed deltas, read through
+   Python source)        ``sources/sink_commits.py``)
+
+Silver is the only query that scans bronze for the gold layer: it
+cleanses and dedups once per trigger, and every gold query reads
+silver's committed deltas, one silver commit per gold micro-batch, and
+declares its own ``ts`` watermark on them (one watermark per layer).
+Gold queries run without no-data batches of their own, so their
+watermark and evictions follow silver's batches exactly. Requesting any
+gold query starts silver.
+
+Fold exception: when the members of a shared-plan group are requested
+(silver+heavy_hitters+countmin+hll+hll_hour, gold_hour+gold_hour_rank,
+pairs+latency_hist), the group runs as ONE query — one checkpoint, N
+sinks, each sink exactly-once via its own commit log.
+
+Queries reading bronze (each scans the source itself):
   silver      raw → cleanse → dropDuplicatesWithinWatermark → MERGE
-  gold_hour   silver-stream → tumbling 1h window agg → MERGE (append-on-close)
-  gold_hour_rank  same agg → per-closed-window dense_rank in foreachBatch
-              (W10 streaming form) → MERGE
-  gold_day    same at day grain
-  sessions    silver-stream → session_window(30 min) → MERGE (update-on-merge)
-  pairs       silver-stream ⋈ silver-stream (user ↔ response) → MERGE
-  unanswered  negation pattern: watermarked left-outer + null filter
-              (stream-stream anti), timeout-emitted → MERGE
+  features    cleansed bronze → per-conv stateful rolling features → MERGE
+  features_tws  same semantics on the Spark 4 transformWithState API
+                (typed state variables + event-time timers, RocksDB)
   role_runs   CEP R{k,} pattern: stateful run detector, runs emitted on
               definitive closure (role change / eviction flush) → MERGE
   tool_asof   streaming as-of join: latest tool call ≤ each turn's ts
@@ -40,6 +49,19 @@ Queries:
               state bounded by TIME not cardinality; late data folds
               into its window's registers idempotently — no watermark
               needed for correctness)
+  (the four sketch queries fold into silver when it runs, and
+  otherwise run their own cleanse + dedup over bronze)
+
+Gold-layer queries (read silver's committed deltas):
+  gold_hour   tumbling 1h window agg → MERGE (append-on-close)
+  gold_hour_rank  same agg → per-closed-window dense_rank in foreachBatch
+              (W10 streaming form) → MERGE
+  gold_day    same at day grain
+  gold_sliding  1h windows sliding every 15 min → MERGE
+  sessions    session_window(30 min) → MERGE (update-on-merge)
+  pairs       silver ⋈ silver (user ↔ response) → MERGE
+  unanswered  negation pattern: watermarked left-outer + null filter
+              (stream-stream anti), timeout-emitted → MERGE
   latency_hist  global inter-turn latency percentile maintenance:
               per-batch fixed-bin histograms of user→response latency
               (integer µs) riding the pairs join → HistogramSink
@@ -49,13 +71,6 @@ Queries:
               (streaming_latency_hist)
   enriched_hour  stream-static broadcast join (role dimension) feeding
               a per-(window, role_group) aggregate → MERGE
-  features    silver-stream → per-conv stateful rolling features → MERGE
-  features_tws  same semantics on the Spark 4 transformWithState API
-                (typed state variables + event-time timers, RocksDB)
-
-All gold queries consume the *silver stream* directly (single scan of the
-source feeding a shared cleansed stream per query) rather than re-reading
-the silver table — one pass over bronze per query, watermarks aligned.
 """
 
 from __future__ import annotations
@@ -76,11 +91,28 @@ from .sinks import ParquetMergeSink
 
 DEFAULT_WATERMARK = "15 minutes"
 
+# queries that read silver's committed deltas instead of bronze
+GOLD_LAYER = frozenset({
+    "gold_hour", "gold_hour_rank", "gold_day", "gold_sliding", "sessions",
+    "pairs", "latency_hist", "unanswered", "enriched_hour",
+})
+# silver's columns as the gold layer reads them; only enriched_hour
+# reads text, so the other gold queries leave it unread
+SILVER_SCHEMA = (
+    "conv_id string, turn_idx int, role string, text string, "
+    "tool string, ts timestamp"
+)
+SILVER_SCHEMA_NO_TEXT = "conv_id string, turn_idx int, role string, tool string, ts timestamp"
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+
 
 @dataclass
 class PipelineHandles:
     queries: dict[str, StreamingQuery] = field(default_factory=dict)
     sinks: dict[str, ParquetMergeSink] = field(default_factory=dict)
+    # gold query name → its checkpoint, for every query reading silver's
+    # committed deltas
+    silver_readers: dict[str, str] = field(default_factory=dict)
 
     def await_all(self, timeout_s: float | None = None) -> None:
         # `is not None`, not truthiness: timeout_s=0 means "poll, don't
@@ -103,14 +135,21 @@ class PipelineHandles:
         commit log, not with in-flight foreachBatch writers. Sinks without
         a ``compact`` method (e.g. ``IcebergMergeSink``, whose maintenance
         is Iceberg's own rewrite_data_files / expire_snapshots) are
-        skipped, preserving the drop-in sink contract."""
+        skipped, preserving the drop-in sink contract. Silver is folded
+        only through the batch every gold query has committed: a delta
+        a gold query has not read yet must stay live for it."""
         if any(q.isActive for q in self.queries.values()):
             raise RuntimeError("compact_all requires all queries stopped")
-        return {
-            name: s.compact(spark)
-            for name, s in self.sinks.items()
-            if callable(getattr(s, "compact", None))
-        }
+        out = {}
+        for name, s in self.sinks.items():
+            if not callable(getattr(s, "compact", None)):
+                continue
+            if name == "silver" and self.silver_readers:
+                upto = min(_consumed_batch(c) for c in self.silver_readers.values())
+                out[name] = s.compact(spark, upto=upto)
+            else:
+                out[name] = s.compact(spark)
+        return out
 
 
 def _ckpt_latest(checkpoint: str, sub: str) -> int:
@@ -120,6 +159,28 @@ def _ckpt_latest(checkpoint: str, sub: str) -> int:
     if not os.path.isdir(d):
         return -1
     return max((int(f) for f in os.listdir(d) if f.isdigit()), default=-1)
+
+
+def _consumed_batch(checkpoint: str) -> int:
+    """Upstream batch id through which a query reading committed deltas
+    (``sources/sink_commits.py``) has committed, -1 if none."""
+    done = _ckpt_latest(checkpoint, "commits")
+    if done < 0:
+        return -1
+    with open(os.path.join(checkpoint, "offsets", str(done))) as f:
+        return min(int(json.loads(line)["batch"]) for line in f.read().splitlines()[2:])
+
+
+def _batch_lineage(checkpoint: str, batch_id: int) -> dict:
+    """What silver's commit marker records for the gold layer's reader:
+    the source offset this batch covered, copied from the checkpoint's
+    ``offsets/<id>`` (Spark purges those files), and the checkpoint's id
+    (``sources/sink_commits.py``)."""
+    from ..sources.sink_commits import checkpoint_id
+
+    with open(os.path.join(checkpoint, "offsets", str(batch_id))) as f:
+        source = json.loads(f.read().splitlines()[2])
+    return {"source": source, "checkpoint_id": checkpoint_id(checkpoint)}
 
 
 def _sink_max_committed(sink) -> int:
@@ -158,6 +219,21 @@ def _check_sink_alignment(checkpoint: str, name: str, sink, extra_sinks) -> None
             )
 
 
+def _register(spark: SparkSession, source_cls) -> None:
+    """Register a Python data source whose planner workers can import
+    this package. Spark starts those workers with the registration's
+    environment but, unlike UDF workers, without the ``--py-files``
+    includes — so the package's import root (``CHECKOUT_ROOT``: the
+    checkout, or the zip under spark-submit) goes on their PYTHONPATH."""
+    from .. import CHECKOUT_ROOT
+
+    env = spark.sparkContext.environment
+    parts = [p for p in env.get("PYTHONPATH", "").split(":") if p]
+    if CHECKOUT_ROOT not in parts:
+        env["PYTHONPATH"] = ":".join([*parts, CHECKOUT_ROOT])
+    spark.dataSource.register(source_cls)
+
+
 def _start(
     df: DataFrame,
     sink: ParquetMergeSink,
@@ -168,6 +244,7 @@ def _start(
     trigger_interval: str | None,
     transform=None,
     extra_sinks=None,
+    lineage: bool = False,
 ) -> StreamingQuery:
     """``transform``: optional batch-DataFrame → batch-DataFrame function
     applied inside foreachBatch BEFORE the sink — the hook for micro-
@@ -180,8 +257,19 @@ def _start(
     batch instead of once per sink. Exactly-once holds per sink: each
     keeps its own commit log, so a replayed batch id is independently a
     no-op at every sink (a crash between sinks re-runs the batch and
-    only the uncommitted sinks write)."""
+    only the uncommitted sinks write).
+
+    ``lineage``: record the batch's source offset and the checkpoint id
+    in the primary sink's commit marker (``_batch_lineage``) — set for
+    silver, whose committed deltas the gold layer reads."""
     _check_sink_alignment(checkpoint, name, sink, extra_sinks)
+
+    def write(bdf, bid):
+        if lineage:
+            sink.process_batch(bdf, bid, lineage=_batch_lineage(checkpoint, bid))
+        else:
+            sink.process_batch(bdf, bid)
+
     if extra_sinks:
         prim_tr = transform
 
@@ -190,16 +278,16 @@ def _start(
             # not recompute per sink
             bdf.persist()
             try:
-                sink.process_batch(prim_tr(bdf) if prim_tr else bdf, bid)
+                write(prim_tr(bdf) if prim_tr else bdf, bid)
                 for s, tr in extra_sinks:
                     s.process_batch(tr(bdf) if tr else bdf, bid)
             finally:
                 bdf.unpersist()
 
     elif transform is None:
-        handler = sink.foreach_batch_handler()
+        handler = write
     else:
-        handler = lambda bdf, bid: sink.process_batch(transform(bdf), bid)  # noqa: E731
+        handler = lambda bdf, bid: write(transform(bdf), bid)  # noqa: E731
     writer = (
         df.writeStream.queryName(name)
         .outputMode(mode)
@@ -236,20 +324,66 @@ def start_pipeline(
     ``Trigger.AvailableNow`` snapshots ONCE as the final end — a
     one-shot drain through it must use the default trigger +
     ``processAllAvailable`` (see ``run_pipeline_to_completion``), not
-    ``available_now=True``."""
+    ``available_now=True``.
+
+    Gold-layer queries (``GOLD_LAYER``) read silver's committed deltas
+    and start silver with them. They run the default trigger (or
+    ``trigger_interval``), never ``Trigger.AvailableNow``, which would
+    snapshot silver's commits once, before silver has written them;
+    ``run_pipeline_to_completion`` drains them."""
     if source_format == "py_datasource" and available_now:
         raise ValueError(
             "py_datasource + Trigger.AvailableNow under-drains: the "
             "trigger snapshots the rate-limited latestOffset once; use "
             "the default trigger and processAllAvailable instead"
         )
+    gold = sorted(set(queries) & GOLD_LAYER)
+    if available_now and gold:
+        raise ValueError(
+            f"Trigger.AvailableNow under-drains the gold-layer queries {gold}: "
+            "the trigger snapshots silver's commits once, before silver has "
+            "written them; drain with run_pipeline_to_completion instead"
+        )
+    return _start_queries(
+        spark, source_dir, work_dir, queries, watermark, max_files_per_trigger,
+        available_now, trigger_interval, source_format,
+    )
+
+
+def _start_queries(
+    spark: SparkSession,
+    source_dir: str,
+    work_dir: str,
+    queries: tuple[str, ...],
+    watermark: str,
+    max_files_per_trigger: int,
+    available_now: bool,
+    trigger_interval: str | None,
+    source_format: str,
+) -> PipelineHandles:
+    """``start_pipeline`` past its trigger guards: ``available_now``
+    applies to the queries reading bronze only."""
+    # fail loudly on a name no branch below will start: a typo'd query
+    # would otherwise be silently skipped (and even persisted into the
+    # wiring sidecar) while the caller believes its table is produced
+    known = GOLD_LAYER | {
+        "silver", "features", "features_tws", "role_runs", "tool_asof",
+        "heavy_hitters", "countmin", "hll", "hll_hour",
+    }
+    unknown = [q for q in queries if q not in known]
+    if unknown:
+        raise ValueError(
+            f"unknown streaming queries {unknown}; known: {sorted(known)}"
+        )
+    if set(queries) & GOLD_LAYER and "silver" not in queries:
+        queries = ("silver", *queries)
     h = PipelineHandles()
 
     def src() -> DataFrame:
         if source_format == "py_datasource":
             from ..sources.py_datasource import SynthTranscriptsDataSource
 
-            spark.dataSource.register(SynthTranscriptsDataSource)
+            _register(spark, SynthTranscriptsDataSource)
             return (
                 spark.readStream.format("synth_transcripts")
                 .option("path", source_dir)
@@ -268,6 +402,24 @@ def start_pipeline(
 
     def table(name: str) -> str:
         return os.path.join(work_dir, "tables", name)
+
+    def silver_src(with_text: bool = False) -> DataFrame:
+        """Silver's committed deltas, one per trigger, with the gold
+        layer's own watermark."""
+        from ..sources.sink_commits import SinkCommitsDataSource
+
+        _register(spark, SinkCommitsDataSource)
+        # the bronze offset before silver's first batch
+        initial = {"row": 0} if source_format == "py_datasource" else {"logOffset": -1}
+        return (
+            spark.readStream.format("sink_commits")
+            .schema(SILVER_SCHEMA if with_text else SILVER_SCHEMA_NO_TEXT)
+            .option("path", table("silver"))
+            .option("checkpoint", ckpt("silver"))
+            .option("initialOffset", json.dumps(initial))
+            .load()
+            .withWatermark("ts", watermark)
+        )
 
     # ---- multi-sink folds (same upstream plan → one query, N sinks) ----
     # heavy_hitters' MG summary is a stateless per-batch transform over
@@ -294,20 +446,6 @@ def start_pipeline(
     # silently dropped (an additive sink then permanently undercounts).
     # Record sink -> feeding-checkpoint wiring per work_dir and refuse
     # a mismatch loudly.
-    # fail loudly on a name no branch below will start: a typo'd query
-    # would otherwise be silently skipped (and even persisted into the
-    # wiring sidecar) while the caller believes its table is produced
-    known = {
-        "silver", "gold_hour", "gold_hour_rank", "gold_day", "gold_sliding",
-        "sessions", "features", "features_tws", "role_runs", "unanswered",
-        "tool_asof", "enriched_hour", "heavy_hitters", "countmin", "hll",
-        "hll_hour", "pairs", "latency_hist",
-    }
-    unknown = [q for q in queries if q not in known]
-    if unknown:
-        raise ValueError(
-            f"unknown streaming queries {unknown}; known: {sorted(known)}"
-        )
     wiring = {q: q for q in queries}
     if fold_hh:
         wiring["heavy_hitters"] = "silver"
@@ -462,7 +600,7 @@ def start_pipeline(
         q = _start(
             silver_stream(src(), watermark), sink, "silver", ckpt("silver"),
             "append", available_now, trigger_interval,
-            extra_sinks=extra or None,
+            extra_sinks=extra or None, lineage=True,
         )
         h.queries["silver"] = q
         if fold_hh:
@@ -473,70 +611,6 @@ def start_pipeline(
             h.queries["hll"] = q
         if fold_hll_hour:
             h.queries["hll_hour"] = q
-
-    if "gold_hour" in queries:
-        sink = ParquetMergeSink(table("gold_hour"), ["window_start", "conv_id"], "window_start")
-        h.sinks["gold_hour"] = sink
-        extra = None
-        if fold_rank:
-            from ..plans.gold_windows import rank_window_stats
-
-            rank_sink = ParquetMergeSink(
-                table("gold_hour_rank"), ["window_start", "conv_id"], None
-            )
-            h.sinks["gold_hour_rank"] = rank_sink
-            extra = [(rank_sink, rank_window_stats)]
-        q = _start(
-            conv_window_stats_stream(silver_stream(src(), watermark), "hour"),
-            sink, "gold_hour", ckpt("gold_hour"), "append", available_now,
-            trigger_interval, extra_sinks=extra,
-        )
-        h.queries["gold_hour"] = q
-        if fold_rank:
-            h.queries["gold_hour_rank"] = q
-
-    if "gold_hour_rank" in queries and not fold_rank:
-        from ..plans.gold_windows import rank_window_stats
-
-        # W10 streaming form: append-mode hour windows close fully within
-        # one micro-batch, so a batch-local dense_rank per window_start IS
-        # the global per-window rank (see rank_window_stats docstring)
-        sink = ParquetMergeSink(
-            table("gold_hour_rank"), ["window_start", "conv_id"], None
-        )
-        h.sinks["gold_hour_rank"] = sink
-        h.queries["gold_hour_rank"] = _start(
-            conv_window_stats_stream(silver_stream(src(), watermark), "hour"),
-            sink, "gold_hour_rank", ckpt("gold_hour_rank"), "append",
-            available_now, trigger_interval, transform=rank_window_stats,
-        )
-
-    if "gold_day" in queries:
-        sink = ParquetMergeSink(table("gold_day"), ["window_start", "conv_id"], "window_start")
-        h.sinks["gold_day"] = sink
-        h.queries["gold_day"] = _start(
-            conv_window_stats_stream(silver_stream(src(), watermark), "day"),
-            sink, "gold_day", ckpt("gold_day"), "append", available_now, trigger_interval,
-        )
-
-    if "gold_sliding" in queries:
-        from ..plans.gold_windows import conv_window_stats_sliding_stream
-
-        sink = ParquetMergeSink(table("gold_sliding"), ["window_start", "conv_id"], "window_start")
-        h.sinks["gold_sliding"] = sink
-        h.queries["gold_sliding"] = _start(
-            conv_window_stats_sliding_stream(silver_stream(src(), watermark)),
-            sink, "gold_sliding", ckpt("gold_sliding"), "append", available_now,
-            trigger_interval,
-        )
-
-    if "sessions" in queries:
-        sink = ParquetMergeSink(table("sessions"), ["conv_id", "window_start"], "window_start")
-        h.sinks["sessions"] = sink
-        h.queries["sessions"] = _start(
-            sessionize_stream(silver_stream(src(), watermark), 1800),
-            sink, "sessions", ckpt("sessions"), "append", available_now, trigger_interval,
-        )
 
     if "features" in queries:
         from ..functions.cleansing import cleanse_turns
@@ -560,17 +634,6 @@ def start_pipeline(
         h.queries["role_runs"] = _start(
             role_runs_stream(cleansed, role="user", min_run=2),
             sink, "role_runs", ckpt("role_runs"), "append", available_now,
-            trigger_interval,
-        )
-
-    if "unanswered" in queries:
-        from ..plans.patterns import unanswered_user_turns_stream
-
-        sink = ParquetMergeSink(table("unanswered"), ["conv_id", "turn_idx"], None)
-        h.sinks["unanswered"] = sink
-        h.queries["unanswered"] = _start(
-            unanswered_user_turns_stream(silver_stream(src(), watermark)),
-            sink, "unanswered", ckpt("unanswered"), "append", available_now,
             trigger_interval,
         )
 
@@ -623,34 +686,6 @@ def start_pipeline(
             tool_asof_stream(cleansed),
             sink, "tool_asof", ckpt("tool_asof"), "append", available_now,
             trigger_interval,
-        )
-
-    if "enriched_hour" in queries:
-        from pyspark.sql import functions as F
-
-        from ..datagen.flush import FLUSH_CONV_ID
-        from ..plans.enrich import enriched_role_stats_stream
-
-        # stream-static broadcast enrichment (J1's streaming analog): the
-        # tiny role dimension is broadcast into every micro-batch, then a
-        # normal watermark-driven windowed aggregate groups on the
-        # DIMENSION's column. The flush sentinel is excluded write-side:
-        # the aggregate drops conv_id, so the read view could not filter
-        # it (the filter sits after the watermark node, which still sees
-        # the sentinel and advances).
-        sink = ParquetMergeSink(
-            table("enriched_hour"), ["window_start", "role_group"], None
-        )
-        h.sinks["enriched_hour"] = sink
-        h.queries["enriched_hour"] = _start(
-            enriched_role_stats_stream(
-                silver_stream(src(), watermark).filter(
-                    F.col("conv_id") != FLUSH_CONV_ID
-                ),
-                spark,
-            ),
-            sink, "enriched_hour", ckpt("enriched_hour"), "append",
-            available_now, trigger_interval,
         )
 
     if "heavy_hitters" in queries and not fold_hh:
@@ -711,57 +746,179 @@ def start_pipeline(
             available_now, trigger_interval, transform=_hll_hour_transform(),
         )
 
-    def _lat_hist_transform():
-        from pyspark.sql import functions as F
+    # ---- gold layer: silver's committed deltas, one per trigger -------
+    # No no-data batches of gold's own: gold then evicts only on silver
+    # commits (silver's empty commits included), so its watermark and
+    # evictions follow silver's batches exactly. With them, gold could
+    # run an eviction batch while silver is still writing the batch
+    # holding late rows, and drop rows the chain absorbs today.
+    prev_no_data = spark.conf.get(_NO_DATA_BATCHES)
+    spark.conf.set(_NO_DATA_BATCHES, "false")
+    try:
+        if "gold_hour" in queries:
+            sink = ParquetMergeSink(table("gold_hour"), ["window_start", "conv_id"], "window_start")
+            h.sinks["gold_hour"] = sink
+            extra = None
+            if fold_rank:
+                from ..plans.gold_windows import rank_window_stats
 
-        from ..datagen.flush import FLUSH_CONV_ID
-        from ..operators.histogram import LAT_HIST_BIN_US, pair_latency_bins
+                rank_sink = ParquetMergeSink(
+                    table("gold_hour_rank"), ["window_start", "conv_id"], None
+                )
+                h.sinks["gold_hour_rank"] = rank_sink
+                extra = [(rank_sink, rank_window_stats)]
+            q = _start(
+                conv_window_stats_stream(silver_src(), "hour"),
+                sink, "gold_hour", ckpt("gold_hour"), "append", False,
+                trigger_interval, extra_sinks=extra,
+            )
+            h.queries["gold_hour"] = q
+            if fold_rank:
+                h.queries["gold_hour_rank"] = q
 
-        # the flush sentinel cannot form a pair (its conv has no second
-        # turn), but exclude it anyway — the additive sink can't
-        # un-count a row, and conventions shouldn't rely on the join
-        # shape staying pair-proof
-        return lambda bdf: pair_latency_bins(
-            bdf.filter(F.col("conv_id") != FLUSH_CONV_ID),
-            bin_width_us=LAT_HIST_BIN_US,
-        )
+        if "gold_hour_rank" in queries and not fold_rank:
+            from ..plans.gold_windows import rank_window_stats
 
-    if "pairs" in queries:
-        sink = ParquetMergeSink(table("pairs"), ["conv_id", "user_turn_idx"], None)
-        h.sinks["pairs"] = sink
-        extra = None
-        if fold_lat:
+            # W10 streaming form: append-mode hour windows close fully within
+            # one micro-batch, so a batch-local dense_rank per window_start IS
+            # the global per-window rank (see rank_window_stats docstring)
+            sink = ParquetMergeSink(
+                table("gold_hour_rank"), ["window_start", "conv_id"], None
+            )
+            h.sinks["gold_hour_rank"] = sink
+            h.queries["gold_hour_rank"] = _start(
+                conv_window_stats_stream(silver_src(), "hour"),
+                sink, "gold_hour_rank", ckpt("gold_hour_rank"), "append",
+                False, trigger_interval, transform=rank_window_stats,
+            )
+
+        if "gold_day" in queries:
+            sink = ParquetMergeSink(table("gold_day"), ["window_start", "conv_id"], "window_start")
+            h.sinks["gold_day"] = sink
+            h.queries["gold_day"] = _start(
+                conv_window_stats_stream(silver_src(), "day"),
+                sink, "gold_day", ckpt("gold_day"), "append", False, trigger_interval,
+            )
+
+        if "gold_sliding" in queries:
+            from ..plans.gold_windows import conv_window_stats_sliding_stream
+
+            sink = ParquetMergeSink(table("gold_sliding"), ["window_start", "conv_id"], "window_start")
+            h.sinks["gold_sliding"] = sink
+            h.queries["gold_sliding"] = _start(
+                conv_window_stats_sliding_stream(silver_src()),
+                sink, "gold_sliding", ckpt("gold_sliding"), "append", False,
+                trigger_interval,
+            )
+
+        if "sessions" in queries:
+            sink = ParquetMergeSink(table("sessions"), ["conv_id", "window_start"], "window_start")
+            h.sinks["sessions"] = sink
+            h.queries["sessions"] = _start(
+                sessionize_stream(silver_src(), 1800),
+                sink, "sessions", ckpt("sessions"), "append", False, trigger_interval,
+            )
+
+        if "unanswered" in queries:
+            from ..plans.patterns import unanswered_user_turns_stream
+
+            sink = ParquetMergeSink(table("unanswered"), ["conv_id", "turn_idx"], None)
+            h.sinks["unanswered"] = sink
+            h.queries["unanswered"] = _start(
+                unanswered_user_turns_stream(silver_src()),
+                sink, "unanswered", ckpt("unanswered"), "append", False,
+                trigger_interval,
+            )
+
+        if "enriched_hour" in queries:
+            from pyspark.sql import functions as F
+
+            from ..datagen.flush import FLUSH_CONV_ID
+            from ..plans.enrich import enriched_role_stats_stream
+
+            # stream-static broadcast enrichment (J1's streaming analog): the
+            # tiny role dimension is broadcast into every micro-batch, then a
+            # normal watermark-driven windowed aggregate groups on the
+            # DIMENSION's column. The flush sentinel is excluded write-side:
+            # the aggregate drops conv_id, so the read view could not filter
+            # it. The filter must sit after the watermark node, which has to
+            # see the sentinel to advance; the optimizer pushes a filter
+            # below a watermark unless it references the event-time column,
+            # hence the (always false) ts IS NULL arm.
+            sink = ParquetMergeSink(
+                table("enriched_hour"), ["window_start", "role_group"], None
+            )
+            h.sinks["enriched_hour"] = sink
+            h.queries["enriched_hour"] = _start(
+                enriched_role_stats_stream(
+                    silver_src(with_text=True).filter(
+                        (F.col("conv_id") != FLUSH_CONV_ID) | F.col("ts").isNull()
+                    ),
+                    spark,
+                ),
+                sink, "enriched_hour", ckpt("enriched_hour"), "append",
+                False, trigger_interval,
+            )
+
+        def _lat_hist_transform():
+            from pyspark.sql import functions as F
+
+            from ..datagen.flush import FLUSH_CONV_ID
+            from ..operators.histogram import LAT_HIST_BIN_US, pair_latency_bins
+
+            # the flush sentinel cannot form a pair (its conv has no second
+            # turn), but exclude it anyway — the additive sink can't
+            # un-count a row, and conventions shouldn't rely on the join
+            # shape staying pair-proof
+            return lambda bdf: pair_latency_bins(
+                bdf.filter(F.col("conv_id") != FLUSH_CONV_ID),
+                bin_width_us=LAT_HIST_BIN_US,
+            )
+
+        if "pairs" in queries:
+            sink = ParquetMergeSink(table("pairs"), ["conv_id", "user_turn_idx"], None)
+            h.sinks["pairs"] = sink
+            extra = None
+            if fold_lat:
+                from ..operators.histogram import LAT_HIST_BIN_US
+                from .sinks import HistogramSink
+
+                # global inter-turn latency percentile maintenance: the
+                # pairs stream already carries (user_ts, response_ts) per
+                # emitted pair, so the histogram rides it as one more
+                # additive delta per micro-batch (≤ n_bins rows of state)
+                lat_sink = HistogramSink(table("latency_hist"), bin_width=LAT_HIST_BIN_US)
+                h.sinks["latency_hist"] = lat_sink
+                extra = [(lat_sink, _lat_hist_transform())]
+            q = _start(
+                user_response_pairs_stream(silver_src()),
+                sink, "pairs", ckpt("pairs"), "append", False, trigger_interval,
+                extra_sinks=extra,
+            )
+            h.queries["pairs"] = q
+            if fold_lat:
+                h.queries["latency_hist"] = q
+
+        if "latency_hist" in queries and not fold_lat:
             from ..operators.histogram import LAT_HIST_BIN_US
             from .sinks import HistogramSink
 
-            # global inter-turn latency percentile maintenance: the
-            # pairs stream already carries (user_ts, response_ts) per
-            # emitted pair, so the histogram rides it as one more
-            # additive delta per micro-batch (≤ n_bins rows of state)
-            lat_sink = HistogramSink(table("latency_hist"), bin_width=LAT_HIST_BIN_US)
-            h.sinks["latency_hist"] = lat_sink
-            extra = [(lat_sink, _lat_hist_transform())]
-        q = _start(
-            user_response_pairs_stream(silver_stream(src(), watermark)),
-            sink, "pairs", ckpt("pairs"), "append", available_now, trigger_interval,
-            extra_sinks=extra,
-        )
-        h.queries["pairs"] = q
-        if fold_lat:
-            h.queries["latency_hist"] = q
-
-    if "latency_hist" in queries and not fold_lat:
-        from ..operators.histogram import LAT_HIST_BIN_US
-        from .sinks import HistogramSink
-
-        # standalone form: its own pairs join feeding only the histogram
-        sink = HistogramSink(table("latency_hist"), bin_width=LAT_HIST_BIN_US)
-        h.sinks["latency_hist"] = sink
-        h.queries["latency_hist"] = _start(
-            user_response_pairs_stream(silver_stream(src(), watermark)),
-            sink, "latency_hist", ckpt("latency_hist"), "append",
-            available_now, trigger_interval, transform=_lat_hist_transform(),
-        )
+            # standalone form: its own pairs join feeding only the histogram
+            sink = HistogramSink(table("latency_hist"), bin_width=LAT_HIST_BIN_US)
+            h.sinks["latency_hist"] = sink
+            h.queries["latency_hist"] = _start(
+                user_response_pairs_stream(silver_src()),
+                sink, "latency_hist", ckpt("latency_hist"), "append",
+                False, trigger_interval, transform=_lat_hist_transform(),
+            )
+    except BaseException:
+        h.stop_all()  # silver may have been started for the gold layer
+        raise
+    finally:
+        spark.conf.set(_NO_DATA_BATCHES, prev_no_data)
+    h.silver_readers = {
+        q: ckpt(q) for q, c in wiring.items() if q in GOLD_LAYER and c == q
+    }
 
     _commit_wiring()
     return h
@@ -780,14 +937,21 @@ def run_pipeline_to_completion(
     """Drain the whole source and return handles. Rate control is
     preserved (micro-batches of ``max_files_per_trigger`` files), so
     watermark semantics match a live run over the same arrival order.
-    The file source drains under ``Trigger.AvailableNow``; the
-    registered Python Data Source (``source_format="py_datasource"``)
-    drains under the default trigger + ``processAllAvailable`` — its
-    rate limit lives in ``latestOffset``, which AvailableNow snapshots
-    once (see ``start_pipeline``) — then stops each query. Both paths
-    run the post-watermark flush batches (``processAllAvailable`` blocks
-    until no-new-data, which includes the stateful flush batch the
-    sentinel's watermark advance schedules).
+
+    One drain path for both source formats:
+      1. start every query;
+      2. drain the queries reading bronze, silver among them: the file
+         source under ``Trigger.AvailableNow``, the registered Python
+         Data Source (``source_format="py_datasource"``) under the
+         default trigger + ``processAllAvailable`` — its rate limit
+         lives in ``latestOffset``, which AvailableNow snapshots once
+         (see ``start_pipeline``);
+      3. ``processAllAvailable`` on each gold-layer query, which then
+         has every silver commit to read, then stop them all.
+    Both formats run the post-watermark flush batches
+    (``processAllAvailable`` blocks until no-new-data, which includes
+    the stateful flush batch the sentinel's watermark advance schedules,
+    and gold reads silver's flush commit like any other).
 
     ``shuffle_partitions``: state stores are instantiated and committed
     PER shuffle partition PER stateful operator PER micro-batch — at
@@ -799,23 +963,29 @@ def run_pipeline_to_completion(
     if shuffle_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     try:
-        h = start_pipeline(
+        available_now = source_format != "py_datasource"
+        h = _start_queries(
             spark, source_dir, work_dir, queries, watermark,
-            max_files_per_trigger,
-            available_now=source_format != "py_datasource",
-            source_format=source_format,
+            max_files_per_trigger, available_now, None, source_format,
         )
-        if source_format == "py_datasource":
-            # stop_all in finally: a query failing mid-drain (e.g.
-            # state-server timeouts under CPU steal) must not leave the
-            # other default-trigger queries running forever in the
-            # driver — the AvailableNow path self-terminates, this one
-            # doesn't
-            try:
-                for q in h.queries.values():
+        distinct = list({id(q): q for q in h.queries.values()}.values())
+        gold = {id(h.queries[n]) for n in h.silver_readers}
+        # stop_all in finally: a query failing mid-drain (e.g.
+        # state-server timeouts under CPU steal) must not leave the
+        # default-trigger queries running forever in the driver
+        try:
+            for q in distinct:
+                if id(q) in gold:
+                    continue
+                if available_now:
+                    q.awaitTermination()
+                else:
                     q.processAllAvailable()
-            finally:
-                h.stop_all()
+            for q in distinct:
+                if id(q) in gold:
+                    q.processAllAvailable()
+        finally:
+            h.stop_all()
         h.await_all()
     finally:
         if shuffle_partitions is not None:

@@ -117,6 +117,11 @@ class IcebergMergeSink:
         """Idempotent exactly-once upsert: skip if the batch id is already
         in the commit log, else one ACID MERGE + commit-log append."""
         if self.is_committed(batch_id):
+            # a crash after the commit-log append but before the
+            # checkpoint commit replays the batch: its plan must still
+            # run, or its state stores never commit the batch
+            # (ParquetMergeSink.process_batch does the same)
+            df.write.format("noop").mode("overwrite").save()
             return
         self._ensure_table(df)
         # view name embeds the SANITIZED table name (not a hash of it —

@@ -138,9 +138,16 @@ class ParquetMergeSink:
             json.dump(schema.jsonValue(), f, indent=2)
         os.rename(tmp, self._schema_path)
 
-    def process_batch(self, df: DataFrame, batch_id: int) -> None:
+    def process_batch(
+        self, df: DataFrame, batch_id: int, lineage: dict | None = None
+    ) -> None:
         """The ``foreachBatch`` handler. Idempotent: replaying a committed
-        batch is a no-op; a torn write is overwritten at the same path."""
+        batch is a no-op; a torn write is overwritten at the same path.
+
+        ``lineage``: extra JSON fields for the commit marker — the engine
+        records there which source offset the batch covered and which
+        checkpoint issued its id, for readers of this table's committed
+        deltas (``sources/sink_commits.py``)."""
         if self.is_committed(batch_id):
             # a crash after this sink's marker but before the checkpoint
             # commit replays the batch: the plan must still run, or its
@@ -149,7 +156,7 @@ class ParquetMergeSink:
             df.write.format("noop").mode("overwrite").save()
             return
         self._bind_schema(df.schema)
-        out = os.path.join(self.data_dir, f"batch-{batch_id:08d}")
+        out = self.delta_path(batch_id)
         df = df.withColumn("__batch_id", F.lit(batch_id))
         df.write.mode("overwrite").parquet(out)
 
@@ -169,8 +176,20 @@ class ParquetMergeSink:
         # atomic-ish commit marker LAST: presence == batch fully durable
         tmp = self._commit_marker(batch_id) + ".tmp"
         with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id, "rows": stats["rows"]}, f)
+            json.dump({"batch_id": batch_id, "rows": stats["rows"], **(lineage or {})}, f)
         os.rename(tmp, self._commit_marker(batch_id))
+
+    def delta_path(self, batch_id: int) -> str:
+        return os.path.join(self.data_dir, f"batch-{batch_id:08d}")
+
+    def commit_record(self, batch_id: int) -> dict | None:
+        """The commit marker's JSON, or None while the batch is not
+        committed (or was folded away by compaction)."""
+        try:
+            with open(self._commit_marker(batch_id)) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return None
 
     def _footer_stats(self, out_dir: str) -> dict:
         import glob as _glob
@@ -243,11 +262,7 @@ class ParquetMergeSink:
     def _live_paths(self) -> list[str]:
         through = self.compacted_through()
         paths = [self._snapshot_path(through)] if through >= 0 else []
-        paths += [
-            os.path.join(self.data_dir, f"batch-{b:08d}")
-            for b in self.committed_batches()
-        ]
-        return paths
+        return paths + [self.delta_path(b) for b in self.committed_batches()]
 
     def _compact_frame(self, df: DataFrame) -> DataFrame:
         """Keyed latest-wins fold of the live paths (upsert compaction)."""
@@ -312,10 +327,16 @@ class ParquetMergeSink:
         spark: SparkSession,
         zorder_by: list[str] | None = None,
         zorder_files: int | None = None,
+        upto: int | None = None,
     ) -> dict:
         """Fold every committed delta (and any prior snapshot) into one
         snapshot at the current high-water batch id. Runs BETWEEN streaming
         runs (same coordination point as checkpoint-version GC).
+
+        ``upto`` caps the fold at that batch id: deltas above it stay
+        live. A table whose committed deltas feed downstream streams is
+        folded only through the batch every reader has committed — a
+        folded delta is gone for a reader that has not read it yet.
 
         ``zorder_by=[colA, colB]`` additionally clusters the snapshot's
         FILES on the Morton curve of the two columns (the lakehouse
@@ -324,13 +345,14 @@ class ParquetMergeSink:
         semantics, manifests, and GC are byte-for-byte unaffected (the
         layout only reorders rows across files)."""
         old_through = self.compacted_through()
-        deltas = self.committed_batches()
+        deltas = [b for b in self.committed_batches() if upto is None or b <= upto]
         if not deltas:
             if old_through >= 0:
                 self._gc_stale(old_through)  # finish any interrupted cleanup
             return {"through": old_through, "compacted_deltas": 0}
         through = max(deltas)
-        src = self._live_paths()
+        src = [self._snapshot_path(old_through)] if old_through >= 0 else []
+        src += [self.delta_path(b) for b in deltas]
         out = self._snapshot_path(through)
         # the sidecar reader, NOT a bare parquet read: folding a
         # mixed-schema delta pile with inference resolves to whichever
@@ -466,11 +488,7 @@ class ParquetMergeSink:
                 "Iceberg snapshot-expiration semantic"
             )
         paths = [self._snapshot_path(through)] if through >= 0 else []
-        paths += [
-            os.path.join(self.data_dir, f"batch-{b:08d}")
-            for b in self.committed_batches()
-            if b <= batch_id
-        ]
+        paths += [self.delta_path(b) for b in self.committed_batches() if b <= batch_id]
         if not paths:
             raise FileNotFoundError(
                 f"no committed batches at or before {batch_id} in {self.table_dir}"

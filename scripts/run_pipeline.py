@@ -18,13 +18,15 @@ Local smoke (what the test does):
 
     spark-submit --master 'local[4]' --py-files dist/engine.zip \
         scripts/run_pipeline.py --source <dir> --work-dir <dir> \
-        --queries silver --available-now
+        --queries silver,gold_hour --available-now
 
 Each query gets its own checkpoint under ``<work-dir>/checkpoints`` —
 re-running the same command resumes from offsets (the Glue-bookmark
 analog). ``--available-now`` drains the current source and exits
-(backfill mode); without it the queries run continuously at
-``--trigger`` cadence (the reference's 5-minute EventBridge analog).
+(backfill mode, through ``run_pipeline_to_completion``: silver drains
+first, then each gold query reads every silver commit); without it the
+queries run continuously at ``--trigger`` cadence (the reference's
+5-minute EventBridge analog).
 """
 
 from __future__ import annotations
@@ -49,7 +51,10 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    from crypto_near_real_time_data_ingestion_spark.streaming.engine import start_pipeline
+    from crypto_near_real_time_data_ingestion_spark.streaming.engine import (
+        run_pipeline_to_completion,
+        start_pipeline,
+    )
     from crypto_near_real_time_data_ingestion_spark.streaming.listener import (
         MetricsListener,
     )
@@ -61,17 +66,23 @@ def main() -> int:
     listener = MetricsListener(jsonl_path=args.metrics_jsonl)
     spark.streams.addListener(listener)
 
-    handles = start_pipeline(
-        spark,
-        source_dir=args.source,
-        work_dir=args.work_dir,
-        queries=tuple(q.strip() for q in args.queries.split(",") if q.strip()),
-        watermark=args.watermark,
-        max_files_per_trigger=args.max_files_per_trigger,
-        available_now=args.available_now,
-        trigger_interval=args.trigger,
-    )
-    handles.await_all()
+    queries = tuple(q.strip() for q in args.queries.split(",") if q.strip())
+    if args.available_now:
+        handles = run_pipeline_to_completion(
+            spark, args.source, args.work_dir, queries, args.watermark,
+            args.max_files_per_trigger,
+        )
+    else:
+        handles = start_pipeline(
+            spark,
+            source_dir=args.source,
+            work_dir=args.work_dir,
+            queries=queries,
+            watermark=args.watermark,
+            max_files_per_trigger=args.max_files_per_trigger,
+            trigger_interval=args.trigger,
+        )
+        handles.await_all()
     summary = {
         "queries": sorted(handles.queries),
         "input_rows": listener.total_input_rows(),

@@ -122,3 +122,16 @@ def test_windowed_drift_matches_per_window_batch_drift(
     # sanity: identical distributions score 0 (reference vs itself)
     self_drift = corpus_drift(reference, reference).first()
     assert self_drift["js_divergence"] == pytest.approx(0.0, abs=1e-12)
+
+
+def test_null_event_time_is_an_absence(spark):
+    """A row with a NULL ``ts`` belongs to no window: it contributes no
+    counts, rather than a NULL-keyed window row that windowed_drift's
+    equality joins would strand."""
+    rows = spark.createDataFrame(
+        [("c1", "alpha beta", "2025-06-01 00:10:00"), ("c2", "alpha gamma", None)],
+        "conv_id string, text string, ts string",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    got = {(r.token, r["count"]) for r in token_window_counts(rows).collect()}
+    assert got == {("alpha", 1), ("beta", 1)}
+    assert token_window_counts(rows).filter(F.col("window_start").isNull()).count() == 0

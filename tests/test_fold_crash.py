@@ -136,6 +136,42 @@ def test_crash_before_checkpoint_commit_replays(
     )
 
 
+def test_gold_crash_before_checkpoint_commit_replays(
+    spark, transcripts_parquet, stream_parquet_dir
+):
+    """The same crash point for a gold query reading silver's committed
+    deltas: gold_hour's sink committed its last batch, its checkpoint
+    did not. The restart replans that batch from the restored offset
+    (the silver commit it covers), runs the plan through the windowed
+    state, and leaves gold_hour equal to the batch oracle."""
+    from crypto_near_real_time_data_ingestion_spark.plans.gold_windows import (
+        conv_window_stats,
+    )
+
+    work = WORK + "_gold_ckpt_commit"
+    shutil.rmtree(work, ignore_errors=True)
+    fsrc = build_flushed_source(stream_parquet_dir, os.path.join(work, "source"))
+    queries = ("silver", "gold_hour")
+    run_pipeline_to_completion(
+        spark, fsrc, work, queries=queries, max_files_per_trigger=4
+    )
+    commits = os.path.join(work, "checkpoints", "gold_hour", "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    marker = os.path.join(
+        work, "tables", "gold_hour", "_commits", f"batch-{last:08d}.json"
+    )
+    assert os.path.exists(marker)
+    os.remove(os.path.join(commits, str(last)))
+    os.remove(os.path.join(commits, f".{last}.crc"))
+    h = run_pipeline_to_completion(
+        spark, fsrc, work, queries=queries, max_files_per_trigger=4
+    )
+    assert os.path.exists(os.path.join(commits, str(last)))
+    got = h.sinks["gold_hour"].read(spark).filter(F.col("conv_id") != FLUSH_CONV_ID)
+    want = conv_window_stats(silver_batch(read_transcripts(spark, transcripts_parquet)))
+    assert_df_equal(got, want.toPandas(), sort_cols=["conv_id", "window_start"])
+
+
 def test_topology_switch_on_existing_work_dir_refuses(spark):
     """Restarting a work_dir with a different fold topology must be a
     LOUD error, not silent data loss: a folded heavy_hitters sink holds

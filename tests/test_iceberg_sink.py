@@ -69,3 +69,17 @@ def test_iceberg_merge_exactly_once(spark):
     sink.process_batch(_mk_df(spark, [("z", 9, t)]), 1)
     assert sink.read(spark).filter("conv_id = 'z'").count() == 0
     assert len(sink.manifests()) >= 2
+
+
+def test_replayed_batch_still_runs_its_plan(spark):
+    """A replay of a committed batch skips the MERGE but runs the plan to
+    a noop write, so a replayed batch still commits its state stores.
+    Pinned without the Iceberg jar: the sink is built without its
+    constructor and the batch's plan raises when it runs."""
+    from pyspark.sql import functions as F
+
+    sink = object.__new__(IcebergMergeSink)
+    sink.is_committed = lambda batch_id: True
+    df = spark.range(1).select(F.raise_error(F.lit("plan ran")).alias("x"))
+    with pytest.raises(Exception, match="plan ran"):
+        sink.process_batch(df, 7)

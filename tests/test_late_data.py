@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import time
 
 import numpy as np
 import pandas as pd
@@ -42,9 +43,11 @@ def _write(df: pd.DataFrame, path: str, mtime: float) -> None:
     os.utime(path, (mtime, mtime))
 
 
-def test_late_rows_beyond_watermark_are_dropped(spark):
-    shutil.rmtree(WORK, ignore_errors=True)
-    src = os.path.join(WORK, "source")
+def _late_source(work: str) -> str:
+    """Four one-file batches whose third arrives after the watermark
+    passed its event time."""
+    shutil.rmtree(work, ignore_errors=True)
+    src = os.path.join(work, "source")
     os.makedirs(src)
     t0 = pd.Timestamp("2025-06-01 00:00:00")
 
@@ -69,6 +72,11 @@ def test_late_rows_beyond_watermark_are_dropped(spark):
     _write(rows([("c1", 0, 0), ("c1", 2, 2)]), f"{src}/f3.parquet", 1e9 + 2)
     # file 4: flush
     _write(rows([("c3", 0, 720)]), f"{src}/f4.parquet", 1e9 + 3)
+    return src
+
+
+def test_late_rows_beyond_watermark_are_dropped(spark):
+    src = _late_source(WORK)
 
     lst = MetricsListener()
     spark.streams.addListener(lst)
@@ -142,3 +150,34 @@ def test_session_window_absorbs_late_in_watermark_rows(spark):
     assert c1[0]["n_turns"] == 3
     assert str(c1[0]["session_start"]) == "2025-06-01 00:00:00"
     assert str(c1[0]["session_end"]) == "2025-06-01 00:02:00"
+
+
+def test_gold_waits_for_a_slow_silver_commit(spark, monkeypatch):
+    """Gold reads silver's commits and runs no eviction batch of its own:
+    while silver is still writing the batch that holds the late rows,
+    gold must not close their hour window on the watermark the previous
+    batch raised. Silver's commit of that batch (batch 2: one file per
+    trigger) is delayed by several seconds; the c1 window still absorbs
+    the late turn, as in the undelayed drain above."""
+    from crypto_near_real_time_data_ingestion_spark.streaming.sinks import (
+        ParquetMergeSink,
+    )
+
+    work = WORK + "_slow_silver"
+    src = _late_source(work)
+    orig = ParquetMergeSink.process_batch
+
+    def slow_silver(self, df, batch_id, lineage=None):
+        if self.table_dir.endswith("silver") and batch_id == 2:
+            time.sleep(6)
+        return orig(self, df, batch_id, lineage)
+
+    monkeypatch.setattr(ParquetMergeSink, "process_batch", slow_silver)
+    h = run_pipeline_to_completion(
+        spark, src, work, queries=("silver", "gold_hour"), watermark="15 minutes",
+        max_files_per_trigger=1, source_format="py_datasource",
+    )
+    c1_w0 = h.sinks["gold_hour"].read(spark).filter(
+        (F.col("conv_id") == "c1") & (F.col("window_start") == "2025-06-01 00:00:00")
+    ).collect()
+    assert len(c1_w0) == 1 and c1_w0[0]["n_turns"] == 3

@@ -35,7 +35,7 @@ def test_spark_submit_pyfiles(transcripts_parquet, stream_parquet_dir):
             os.path.join(REPO, "scripts", "run_pipeline.py"),
             "--source", stream_parquet_dir,
             "--work-dir", work,
-            "--queries", "silver",
+            "--queries", "silver,gold_hour",
             "--available-now",
             "--max-files-per-trigger", "8",
         ],
@@ -53,3 +53,6 @@ def test_spark_submit_pyfiles(transcripts_parquet, stream_parquet_dir):
     # sink table exists with committed batches
     assert os.path.isdir(os.path.join(work, "tables", "silver", "_commits"))
     assert len(os.listdir(os.path.join(work, "tables", "silver", "_commits"))) > 0
+    # gold read silver's committed deltas through the sink_commits
+    # source, loaded from the zip alone
+    assert len(os.listdir(os.path.join(work, "tables", "gold_hour", "_commits"))) > 0

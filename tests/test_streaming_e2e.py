@@ -378,6 +378,70 @@ def test_resume_from_checkpoint_py_datasource(
     assert_df_equal(got, want, sort_cols=["conv_id", "turn_idx"])
 
 
+def test_resume_gold_behind_silver(spark, transcripts_parquet, stream_parquet_dir):
+    """Gold reads silver's committed deltas, so a restart can find silver
+    ahead of gold: stop the gold queries mid-stream, let silver run on,
+    fold silver's table between runs, then restart and drain. compact_all
+    folds silver only through the batch both gold queries committed, and
+    the restarted gold queries read the rest one commit per trigger —
+    their output equals the batch oracle."""
+    import time
+
+    from crypto_near_real_time_data_ingestion_spark.streaming.engine import (
+        _consumed_batch,
+        start_pipeline,
+    )
+
+    work = "/tmp/spark_graft_resume_gold"
+    shutil.rmtree(work, ignore_errors=True)
+    fsrc = build_flushed_source(stream_parquet_dir, os.path.join(work, "source"))
+    queries = ("silver", "gold_hour", "pairs")
+    h1 = start_pipeline(
+        spark, fsrc, work, queries=queries, max_files_per_trigger=1,
+        trigger_interval="1 seconds",
+    )
+
+    def wait_for(cond):
+        deadline = time.time() + 120
+        while time.time() < deadline and not cond():
+            time.sleep(0.5)
+        assert cond()
+
+    wait_for(lambda: len(h1.sinks["gold_hour"].committed_batches()) >= 2)
+    for name in ("gold_hour", "pairs"):
+        h1.queries[name].stop()
+    gold_done = max(h1.sinks["gold_hour"].committed_batches())
+    wait_for(lambda: max(h1.sinks["silver"].committed_batches()) >= gold_done + 3)
+    h1.stop_all()
+    for q in h1.queries.values():
+        q.awaitTermination(60)
+
+    silver_done = max(h1.sinks["silver"].committed_batches())
+    consumed = min(_consumed_batch(c) for c in h1.silver_readers.values())
+    assert consumed < silver_done
+    res = h1.compact_all(spark)
+    assert res["silver"]["through"] == consumed
+    # the deltas gold has not read stay live
+    assert h1.sinks["silver"].committed_batches() == list(
+        range(consumed + 1, silver_done + 1)
+    )
+
+    h2 = run_pipeline_to_completion(
+        spark, fsrc, work, queries=queries, max_files_per_trigger=4
+    )
+    silver = silver_batch(read_transcripts(spark, transcripts_parquet))
+    assert_df_equal(
+        _no_flush(h2.sinks["gold_hour"].read(spark)),
+        conv_window_stats(silver, "hour").toPandas(),
+        sort_cols=["conv_id", "window_start"],
+    )
+    assert_df_equal(
+        _no_flush(h2.sinks["pairs"].read(spark)),
+        user_response_pairs(silver).toPandas(),
+        sort_cols=["conv_id", "user_turn_idx"],
+    )
+
+
 def test_stream_role_runs_equal_batch(spark, transcripts_parquet, drained):
     """Streaming CEP run detector == batch gap-and-island plan: runs
     emitted exactly once, on definitive closure (role change within the
