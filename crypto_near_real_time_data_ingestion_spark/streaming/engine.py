@@ -96,13 +96,6 @@ GOLD_LAYER = frozenset({
     "gold_hour", "gold_hour_rank", "gold_day", "gold_sliding", "sessions",
     "pairs", "latency_hist", "unanswered", "enriched_hour",
 })
-# silver's columns as the gold layer reads them; only enriched_hour
-# reads text, so the other gold queries leave it unread
-SILVER_SCHEMA = (
-    "conv_id string, turn_idx int, role string, text string, "
-    "tool string, ts timestamp"
-)
-SILVER_SCHEMA_NO_TEXT = "conv_id string, turn_idx int, role string, tool string, ts timestamp"
 _NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
 
 
@@ -110,8 +103,8 @@ _NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
 class PipelineHandles:
     queries: dict[str, StreamingQuery] = field(default_factory=dict)
     sinks: dict[str, ParquetMergeSink] = field(default_factory=dict)
-    # gold query name → its checkpoint, for every query reading silver's
-    # committed deltas
+    # gold query name → its checkpoint, for every gold checkpoint in the
+    # work dir, started in this run or not
     silver_readers: dict[str, str] = field(default_factory=dict)
 
     def await_all(self, timeout_s: float | None = None) -> None:
@@ -136,17 +129,19 @@ class PipelineHandles:
         a ``compact`` method (e.g. ``IcebergMergeSink``, whose maintenance
         is Iceberg's own rewrite_data_files / expire_snapshots) are
         skipped, preserving the drop-in sink contract. Silver is folded
-        only through the batch every gold query has committed: a delta
-        a gold query has not read yet must stay live for it."""
+        only through the batch every gold checkpoint in the work dir has
+        committed: a delta a gold query has not read yet must stay live
+        for it, whether or not this run started that query."""
         if any(q.isActive for q in self.queries.values()):
             raise RuntimeError("compact_all requires all queries stopped")
+        consumed = [_consumed_batch(c) for c in self.silver_readers.values()]
+        consumed = [b for b in consumed if b is not None]
         out = {}
         for name, s in self.sinks.items():
             if not callable(getattr(s, "compact", None)):
                 continue
-            if name == "silver" and self.silver_readers:
-                upto = min(_consumed_batch(c) for c in self.silver_readers.values())
-                out[name] = s.compact(spark, upto=upto)
+            if name == "silver" and consumed:
+                out[name] = s.compact(spark, upto=min(consumed))
             else:
                 out[name] = s.compact(spark)
         return out
@@ -161,26 +156,25 @@ def _ckpt_latest(checkpoint: str, sub: str) -> int:
     return max((int(f) for f in os.listdir(d) if f.isdigit()), default=-1)
 
 
-def _consumed_batch(checkpoint: str) -> int:
+def _consumed_batch(checkpoint: str) -> int | None:
     """Upstream batch id through which a query reading committed deltas
-    (``sources/sink_commits.py``) has committed, -1 if none."""
+    (``sources/sink_commits.py``) has committed, -1 if none. None for a
+    checkpoint whose offsets name no upstream batch: a gold checkpoint
+    written before the gold layer read silver, which cannot resume."""
     done = _ckpt_latest(checkpoint, "commits")
     if done < 0:
         return -1
     with open(os.path.join(checkpoint, "offsets", str(done))) as f:
-        return min(int(json.loads(line)["batch"]) for line in f.read().splitlines()[2:])
+        batches = [json.loads(line).get("batch") for line in f.read().splitlines()[2:]]
+    return None if None in batches else min(int(b) for b in batches)
 
 
 def _batch_lineage(checkpoint: str, batch_id: int) -> dict:
     """What silver's commit marker records for the gold layer's reader:
     the source offset this batch covered, copied from the checkpoint's
-    ``offsets/<id>`` (Spark purges those files), and the checkpoint's id
-    (``sources/sink_commits.py``)."""
-    from ..sources.sink_commits import checkpoint_id
-
+    ``offsets/<id>`` (Spark purges those files)."""
     with open(os.path.join(checkpoint, "offsets", str(batch_id))) as f:
-        source = json.loads(f.read().splitlines()[2])
-    return {"source": source, "checkpoint_id": checkpoint_id(checkpoint)}
+        return {"source": json.loads(f.read().splitlines()[2])}
 
 
 def _sink_max_committed(sink) -> int:
@@ -259,9 +253,9 @@ def _start(
     no-op at every sink (a crash between sinks re-runs the batch and
     only the uncommitted sinks write).
 
-    ``lineage``: record the batch's source offset and the checkpoint id
-    in the primary sink's commit marker (``_batch_lineage``) — set for
-    silver, whose committed deltas the gold layer reads."""
+    ``lineage``: record the batch's source offset in the primary sink's
+    commit marker (``_batch_lineage``) — set for silver, whose committed
+    deltas the gold layer reads."""
     _check_sink_alignment(checkpoint, name, sink, extra_sinks)
 
     def write(bdf, bid):
@@ -327,10 +321,13 @@ def start_pipeline(
     ``available_now=True``.
 
     Gold-layer queries (``GOLD_LAYER``) read silver's committed deltas
-    and start silver with them. They run the default trigger (or
-    ``trigger_interval``), never ``Trigger.AvailableNow``, which would
-    snapshot silver's commits once, before silver has written them;
-    ``run_pipeline_to_completion`` drains them."""
+    and start silver with them. They always run the default trigger:
+    their pace is set by silver's commits (one per gold batch), and a
+    ``trigger_interval`` would cap them at one silver commit per
+    interval, so a gold query behind silver could never catch up. Never
+    ``Trigger.AvailableNow``, which would snapshot silver's commits
+    once, before silver has written them; ``run_pipeline_to_completion``
+    drains them."""
     if source_format == "py_datasource" and available_now:
         raise ValueError(
             "py_datasource + Trigger.AvailableNow under-drains: the "
@@ -403,17 +400,27 @@ def _start_queries(
     def table(name: str) -> str:
         return os.path.join(work_dir, "tables", name)
 
+    silver_schema = None  # silver's output schema, set where silver is planned
+
     def silver_src(with_text: bool = False) -> DataFrame:
         """Silver's committed deltas, one per trigger, with the gold
-        layer's own watermark."""
+        layer's own watermark. Only enriched_hour reads ``text``; the
+        other gold queries leave it unread."""
+        from pyspark.sql import types as T
+
         from ..sources.sink_commits import SinkCommitsDataSource
 
         _register(spark, SinkCommitsDataSource)
         # the bronze offset before silver's first batch
         initial = {"row": 0} if source_format == "py_datasource" else {"logOffset": -1}
+        schema = T.StructType([
+            T.StructField(f.name, f.dataType, True)
+            for f in silver_schema.fields
+            if with_text or f.name != "text"
+        ])
         return (
             spark.readStream.format("sink_commits")
-            .schema(SILVER_SCHEMA if with_text else SILVER_SCHEMA_NO_TEXT)
+            .schema(schema)
             .option("path", table("silver"))
             .option("checkpoint", ckpt("silver"))
             .option("initialOffset", json.dumps(initial))
@@ -597,8 +604,10 @@ def _start_queries(
             whll_sink = WindowedHllSink(table("hll_hour"), p=STREAM_HLL_P)
             h.sinks["hll_hour"] = whll_sink
             extra.append((whll_sink, _hll_hour_transform()))
+        silver_df = silver_stream(src(), watermark)
+        silver_schema = silver_df.schema
         q = _start(
-            silver_stream(src(), watermark), sink, "silver", ckpt("silver"),
+            silver_df, sink, "silver", ckpt("silver"),
             "append", available_now, trigger_interval,
             extra_sinks=extra or None, lineage=True,
         )
@@ -752,6 +761,10 @@ def _start_queries(
     # evictions follow silver's batches exactly. With them, gold could
     # run an eviction batch while silver is still writing the batch
     # holding late rows, and drop rows the chain absorbs today.
+    # Default trigger: silver's commits set gold's pace (start_pipeline).
+    def start_gold(df, sink, name, **kw) -> StreamingQuery:
+        return _start(df, sink, name, ckpt(name), "append", False, None, **kw)
+
     prev_no_data = spark.conf.get(_NO_DATA_BATCHES)
     spark.conf.set(_NO_DATA_BATCHES, "false")
     try:
@@ -767,10 +780,9 @@ def _start_queries(
                 )
                 h.sinks["gold_hour_rank"] = rank_sink
                 extra = [(rank_sink, rank_window_stats)]
-            q = _start(
+            q = start_gold(
                 conv_window_stats_stream(silver_src(), "hour"),
-                sink, "gold_hour", ckpt("gold_hour"), "append", False,
-                trigger_interval, extra_sinks=extra,
+                sink, "gold_hour", extra_sinks=extra,
             )
             h.queries["gold_hour"] = q
             if fold_rank:
@@ -786,18 +798,17 @@ def _start_queries(
                 table("gold_hour_rank"), ["window_start", "conv_id"], None
             )
             h.sinks["gold_hour_rank"] = sink
-            h.queries["gold_hour_rank"] = _start(
+            h.queries["gold_hour_rank"] = start_gold(
                 conv_window_stats_stream(silver_src(), "hour"),
-                sink, "gold_hour_rank", ckpt("gold_hour_rank"), "append",
-                False, trigger_interval, transform=rank_window_stats,
+                sink, "gold_hour_rank", transform=rank_window_stats,
             )
 
         if "gold_day" in queries:
             sink = ParquetMergeSink(table("gold_day"), ["window_start", "conv_id"], "window_start")
             h.sinks["gold_day"] = sink
-            h.queries["gold_day"] = _start(
+            h.queries["gold_day"] = start_gold(
                 conv_window_stats_stream(silver_src(), "day"),
-                sink, "gold_day", ckpt("gold_day"), "append", False, trigger_interval,
+                sink, "gold_day",
             )
 
         if "gold_sliding" in queries:
@@ -805,18 +816,17 @@ def _start_queries(
 
             sink = ParquetMergeSink(table("gold_sliding"), ["window_start", "conv_id"], "window_start")
             h.sinks["gold_sliding"] = sink
-            h.queries["gold_sliding"] = _start(
+            h.queries["gold_sliding"] = start_gold(
                 conv_window_stats_sliding_stream(silver_src()),
-                sink, "gold_sliding", ckpt("gold_sliding"), "append", False,
-                trigger_interval,
+                sink, "gold_sliding",
             )
 
         if "sessions" in queries:
             sink = ParquetMergeSink(table("sessions"), ["conv_id", "window_start"], "window_start")
             h.sinks["sessions"] = sink
-            h.queries["sessions"] = _start(
+            h.queries["sessions"] = start_gold(
                 sessionize_stream(silver_src(), 1800),
-                sink, "sessions", ckpt("sessions"), "append", False, trigger_interval,
+                sink, "sessions",
             )
 
         if "unanswered" in queries:
@@ -824,10 +834,9 @@ def _start_queries(
 
             sink = ParquetMergeSink(table("unanswered"), ["conv_id", "turn_idx"], None)
             h.sinks["unanswered"] = sink
-            h.queries["unanswered"] = _start(
+            h.queries["unanswered"] = start_gold(
                 unanswered_user_turns_stream(silver_src()),
-                sink, "unanswered", ckpt("unanswered"), "append", False,
-                trigger_interval,
+                sink, "unanswered",
             )
 
         if "enriched_hour" in queries:
@@ -849,15 +858,14 @@ def _start_queries(
                 table("enriched_hour"), ["window_start", "role_group"], None
             )
             h.sinks["enriched_hour"] = sink
-            h.queries["enriched_hour"] = _start(
+            h.queries["enriched_hour"] = start_gold(
                 enriched_role_stats_stream(
                     silver_src(with_text=True).filter(
                         (F.col("conv_id") != FLUSH_CONV_ID) | F.col("ts").isNull()
                     ),
                     spark,
                 ),
-                sink, "enriched_hour", ckpt("enriched_hour"), "append",
-                False, trigger_interval,
+                sink, "enriched_hour",
             )
 
         def _lat_hist_transform():
@@ -890,10 +898,9 @@ def _start_queries(
                 lat_sink = HistogramSink(table("latency_hist"), bin_width=LAT_HIST_BIN_US)
                 h.sinks["latency_hist"] = lat_sink
                 extra = [(lat_sink, _lat_hist_transform())]
-            q = _start(
+            q = start_gold(
                 user_response_pairs_stream(silver_src()),
-                sink, "pairs", ckpt("pairs"), "append", False, trigger_interval,
-                extra_sinks=extra,
+                sink, "pairs", extra_sinks=extra,
             )
             h.queries["pairs"] = q
             if fold_lat:
@@ -906,19 +913,18 @@ def _start_queries(
             # standalone form: its own pairs join feeding only the histogram
             sink = HistogramSink(table("latency_hist"), bin_width=LAT_HIST_BIN_US)
             h.sinks["latency_hist"] = sink
-            h.queries["latency_hist"] = _start(
+            h.queries["latency_hist"] = start_gold(
                 user_response_pairs_stream(silver_src()),
-                sink, "latency_hist", ckpt("latency_hist"), "append",
-                False, trigger_interval, transform=_lat_hist_transform(),
+                sink, "latency_hist", transform=_lat_hist_transform(),
             )
     except BaseException:
         h.stop_all()  # silver may have been started for the gold layer
         raise
     finally:
         spark.conf.set(_NO_DATA_BATCHES, prev_no_data)
-    h.silver_readers = {
-        q: ckpt(q) for q, c in wiring.items() if q in GOLD_LAYER and c == q
-    }
+    # every gold checkpoint the work dir has: compact_all must not fold
+    # a silver delta that one of them has not read, started now or not
+    h.silver_readers = {q: ckpt(q) for q in GOLD_LAYER if os.path.isdir(ckpt(q))}
 
     _commit_wiring()
     return h
@@ -969,7 +975,7 @@ def run_pipeline_to_completion(
             max_files_per_trigger, available_now, None, source_format,
         )
         distinct = list({id(q): q for q in h.queries.values()}.values())
-        gold = {id(h.queries[n]) for n in h.silver_readers}
+        gold = {id(q) for n, q in h.queries.items() if n in GOLD_LAYER}
         # stop_all in finally: a query failing mid-drain (e.g.
         # state-server timeouts under CPU steal) must not leave the
         # default-trigger queries running forever in the driver

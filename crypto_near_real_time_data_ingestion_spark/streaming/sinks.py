@@ -145,9 +145,8 @@ class ParquetMergeSink:
         batch is a no-op; a torn write is overwritten at the same path.
 
         ``lineage``: extra JSON fields for the commit marker — the engine
-        records there which source offset the batch covered and which
-        checkpoint issued its id, for readers of this table's committed
-        deltas (``sources/sink_commits.py``)."""
+        records there which source offset the batch covered, for readers
+        of this table's committed deltas (``sources/sink_commits.py``)."""
         if self.is_committed(batch_id):
             # a crash after this sink's marker but before the checkpoint
             # commit replays the batch: the plan must still run, or its

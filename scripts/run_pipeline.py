@@ -25,8 +25,9 @@ re-running the same command resumes from offsets (the Glue-bookmark
 analog). ``--available-now`` drains the current source and exits
 (backfill mode, through ``run_pipeline_to_completion``: silver drains
 first, then each gold query reads every silver commit); without it the
-queries run continuously at ``--trigger`` cadence (the reference's
-5-minute EventBridge analog).
+queries reading bronze run continuously at ``--trigger`` cadence (the
+reference's 5-minute EventBridge analog), and the gold queries follow
+silver's commits.
 """
 
 from __future__ import annotations

@@ -1,7 +1,8 @@
 """Stream source over a sink's committed deltas (sources/sink_commits.py):
 the offset protocol the gold layer reads silver through, driven without
-Spark — marker visibility, one commit per trigger, restart repair, and
-the compaction and checkpoint-id guards."""
+Spark — marker visibility, one commit per trigger, restart repair, the
+compaction and checkpoint-id guards, and the fold limit compact_all
+reads from a gold checkpoint."""
 
 from __future__ import annotations
 
@@ -47,12 +48,11 @@ def _delta(table: str, batch: int, rows: int) -> None:
     )
 
 
-def _marker(table: str, batch: int, row: int, ckpt_id: str = "A") -> None:
+def _marker(table: str, batch: int, row: int) -> None:
     d = os.path.join(table, "_commits")
     os.makedirs(d, exist_ok=True)
     with open(os.path.join(d, f"batch-{batch:08d}.json"), "w") as f:
-        json.dump({"batch_id": batch, "rows": "0", "source": {"row": row},
-                   "checkpoint_id": ckpt_id}, f)
+        json.dump({"batch_id": batch, "rows": "0", "source": {"row": row}}, f)
 
 
 def _reader(tmp_path, ckpt_id: str = "A") -> _SinkCommitsReader:
@@ -147,3 +147,34 @@ def test_changed_upstream_checkpoint_is_refused(tmp_path):
         restarted.partitions(off, off)
     with pytest.raises(RuntimeError, match="re-created"):
         restarted.commit(off)
+
+
+def test_consumed_batch_reads_the_gold_checkpoint(tmp_path):
+    """compact_all's fold limit: the silver batch a gold checkpoint has
+    committed (the lower side of a self-join), -1 before its first
+    commit, and None for a checkpoint whose offsets name bronze, not
+    silver commits (one written before gold read silver)."""
+    from crypto_near_real_time_data_ingestion_spark.streaming.engine import (
+        _consumed_batch,
+    )
+
+    def ckpt(name, sources, committed):
+        d = tmp_path / name
+        (d / "offsets").mkdir(parents=True)
+        (d / "commits").mkdir()
+        for bid, offs in enumerate(sources):
+            (d / "offsets" / str(bid)).write_text(
+                "\n".join(["v1", "{}", *map(json.dumps, offs)])
+            )
+        for bid in range(committed):
+            (d / "commits" / str(bid)).write_text("v1\n{}")
+        return str(d)
+
+    pair = [
+        {"batch": 4, "checkpoint": "A", "row": 9},
+        {"batch": 3, "checkpoint": "A", "row": 7},
+    ]
+    later = [{"batch": 6, "checkpoint": "A", "row": 11}] * 2
+    assert _consumed_batch(ckpt("pairs", [pair, later], 1)) == 3
+    assert _consumed_batch(ckpt("fresh", [pair], 0)) == -1
+    assert _consumed_batch(ckpt("legacy", [[{"logOffset": 5}]], 1)) is None

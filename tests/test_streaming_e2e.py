@@ -380,11 +380,11 @@ def test_resume_from_checkpoint_py_datasource(
 
 def test_resume_gold_behind_silver(spark, transcripts_parquet, stream_parquet_dir):
     """Gold reads silver's committed deltas, so a restart can find silver
-    ahead of gold: stop the gold queries mid-stream, let silver run on,
-    fold silver's table between runs, then restart and drain. compact_all
-    folds silver only through the batch both gold queries committed, and
-    the restarted gold queries read the rest one commit per trigger —
-    their output equals the batch oracle."""
+    ahead of gold: stop the gold queries mid-stream and let silver run
+    on. Then restart without pairs: gold_hour catches up, and compact_all
+    folds silver only through the batch pairs committed, although this
+    run did not start pairs. Restarted last, pairs reads the rest one
+    commit per trigger. Both tables equal the batch oracle."""
     import time
 
     from crypto_near_real_time_data_ingestion_spark.streaming.engine import (
@@ -416,27 +416,31 @@ def test_resume_gold_behind_silver(spark, transcripts_parquet, stream_parquet_di
     for q in h1.queries.values():
         q.awaitTermination(60)
 
-    silver_done = max(h1.sinks["silver"].committed_batches())
-    consumed = min(_consumed_batch(c) for c in h1.silver_readers.values())
-    assert consumed < silver_done
-    res = h1.compact_all(spark)
+    h2 = run_pipeline_to_completion(
+        spark, fsrc, work, queries=("silver", "gold_hour"), max_files_per_trigger=4
+    )
+    assert "pairs" not in h2.queries and "pairs" in h2.silver_readers
+    silver_done = max(h2.sinks["silver"].committed_batches())
+    consumed = _consumed_batch(h2.silver_readers["pairs"])
+    assert consumed < _consumed_batch(h2.silver_readers["gold_hour"]) == silver_done
+    res = h2.compact_all(spark)
     assert res["silver"]["through"] == consumed
-    # the deltas gold has not read stay live
-    assert h1.sinks["silver"].committed_batches() == list(
+    # the deltas pairs has not read stay live
+    assert h2.sinks["silver"].committed_batches() == list(
         range(consumed + 1, silver_done + 1)
     )
 
-    h2 = run_pipeline_to_completion(
+    h3 = run_pipeline_to_completion(
         spark, fsrc, work, queries=queries, max_files_per_trigger=4
     )
     silver = silver_batch(read_transcripts(spark, transcripts_parquet))
     assert_df_equal(
-        _no_flush(h2.sinks["gold_hour"].read(spark)),
+        _no_flush(h3.sinks["gold_hour"].read(spark)),
         conv_window_stats(silver, "hour").toPandas(),
         sort_cols=["conv_id", "window_start"],
     )
     assert_df_equal(
-        _no_flush(h2.sinks["pairs"].read(spark)),
+        _no_flush(h3.sinks["pairs"].read(spark)),
         user_response_pairs(silver).toPandas(),
         sort_cols=["conv_id", "user_turn_idx"],
     )
