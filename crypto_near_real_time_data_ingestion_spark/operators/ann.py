@@ -309,9 +309,9 @@ def _threshold_pair_emit(threshold: float):
     """Shared above-threshold pair emit for ``_block_pair_scores``:
     round-half-away(6) BEFORE comparing (the grid every exact twin and
     oracle shares) and the qi < ci canonical mask (dedups self-join
-    tiles and orients pairs). Used by ``broadcast_near_dup_pairs`` and
-    ``semdedup.emb_semdedup_pairs`` — one definition, so a rounding or
-    canonical-order fix can never diverge the family."""
+    tiles and orients pairs). Used by ``broadcast_near_dup_pairs`` — one
+    definition, so a rounding or canonical-order fix can never diverge
+    the family."""
 
     def emit(qi: np.ndarray, ci: np.ndarray, sims: np.ndarray):
         sims = _round6_half_away(sims)

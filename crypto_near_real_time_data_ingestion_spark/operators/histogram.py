@@ -58,10 +58,9 @@ def value_bins(df: DataFrame, value_col: str, bin_width: int) -> DataFrame:
     NULL values are absences. Exact integer math — no float edge."""
     if bin_width <= 0:
         raise ValueError(f"bin_width must be positive, got {bin_width}")
-    # EXACT long floor division (the range_join pmod+div form): Spark's
-    # `/` is DOUBLE division, and floor(double) drifts one bin off SQL
-    # `//` for longs past 2^53 (epoch-nanosecond scale) — the precise
-    # trap range_join.py's module note documents (r5 review)
+    # EXACT long floor division (pmod+div): Spark's `/` is DOUBLE
+    # division, and floor(double) drifts one bin off SQL `//` for longs
+    # past 2^53 (epoch-nanosecond scale) (r5 review)
     return (
         df.filter(F.col(value_col).isNotNull())
         .select(

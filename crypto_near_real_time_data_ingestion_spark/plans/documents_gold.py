@@ -87,8 +87,7 @@ def doc_text_stats(docs: DataFrame) -> DataFrame:
         "n_tokens_bpe", token_count_bpe_ish(F.col("text"))
     )
     # single-definition rule: functions/text.stopword_hits IS the
-    # stopword expression (quality_classifier shares it) — never
-    # re-inline the pattern (r5 review)
+    # stopword expression — never re-inline the pattern (r5 review)
     d = d.withColumn("n_stopwords", stopword_hits(F.col("text")))
     # quality score: integer-ratio arithmetic only (cross-engine stable)
     return d.select(
@@ -448,7 +447,7 @@ def doc_split_assign(docs: DataFrame) -> DataFrame:
     unsalted, the decontamination holdout (byte ≥ 240) would carve its
     slice entirely out of this op's own test band (byte ≥ 230), leaving
     a released test split of 10/240 ≈ 4.2% instead of the declared 10%
-    (found composing the two in ``plans/assembly.py``)."""
+    (found composing the two in one dataset-assembly pipeline)."""
     b = _md5_byte(F.concat(F.lit("split:"), F.col("doc_id").cast("string")))
     return docs.filter(F.col("text").isNotNull()).select(
         "doc_id",
@@ -1165,10 +1164,8 @@ def bloom_overlap_flags(
     already-built bitmap (``words``: the int64 array ``build_bloom``
     returns). Entirely map-only (shingle expressions + one vectorized
     pandas-UDF membership count — no explode, no shuffle), so it applies
-    unchanged to a STREAMING frame: the streaming decontamination gate
-    (``streaming/decontam.py``) runs exactly this stage per micro-batch
-    against the static bitmap, which is what makes its equality to the
-    batch op structural rather than coincidental."""
+    unchanged to a STREAMING frame, per micro-batch against the static
+    bitmap."""
     from ..operators.bloom import bloom_count_members
 
     sh = doc_shingles(docs, n).withColumn("hb", _md5_byte(F.col("doc_id")))
@@ -1521,7 +1518,7 @@ def doc_line_dedup(docs: DataFrame) -> DataFrame:
     subtree and the join probe are separate scans unless the whole
     occurrence table is persisted, which at corpus scale is its own
     cost); measured 4.1×/1.3× slower at 4M occurrences across
-    duplication regimes (BASELINE §29, scripts/line_dedup_scale_demo).
+    duplication regimes (BASELINE §29).
     Removed positions then fold to one small array per affected doc;
     the cut itself is the same IN-ROW Catalyst gather as
     ``doc_dedup_spans`` (array_except over the position sequence — no

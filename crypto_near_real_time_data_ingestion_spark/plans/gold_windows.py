@@ -14,11 +14,11 @@ event-time ordering, with ``turn_idx`` as a deterministic tiebreaker
 Streaming formulation is the same plan with a watermark; emitted per
 window close, merged into the gold table by the exactly-once sink.
 
-Scale: group key = (window, conv_id). Hot conversations are handled by
-the salted two-phase variant in ``operators/skew.py``; AQE handles
-moderate skew. Partial aggregation means the shuffle carries one row per
-(conv_id, window) per mapper — at 100 TB this is the difference between
-shuffling ~10^12 rows and ~10^9.
+Scale: group key = (window, conv_id). Hot conversations need no salting:
+map-side partial aggregation already collapses a hot group per mapper
+(salting measured a 2.3× loss, BASELINE.md §11). Partial aggregation
+means the shuffle carries one row per (conv_id, window) per mapper — at
+100 TB this is the difference between shuffling ~10^12 rows and ~10^9.
 """
 
 from __future__ import annotations

@@ -27,6 +27,21 @@ from . import CHECKOUT_ROOT
 # the box's own core count unless SPARK_GRAFT_CPUS pins it
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
+# Runtime SQL confs the sinks' correctness depends on. ``get_spark``
+# builds with them; a session built elsewhere (spark-submit,
+# scripts/run_pipeline.py) must set them before its first query.
+SINK_SQL_CONF = {
+    # deterministic time semantics (reference pins UTC)
+    "spark.sql.session.timeZone": "UTC",
+    # INT64 micros, not legacy INT96: INT96 carries NO footer min/max
+    # stats, which would blind both parquet predicate pushdown on
+    # timestamps and the sink manifests' event-time envelopes (the
+    # data-skipping index for read_time_range)
+    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+    # a partitioned gold overwrite replaces only the partitions it writes
+    "spark.sql.sources.partitionOverwriteMode": "dynamic",
+}
+
 
 def get_spark(
     app_name: str = "transcript-medallion-stream",
@@ -41,8 +56,6 @@ def get_spark(
     b = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cores}]")
-        # deterministic time semantics (reference pins UTC)
-        .config("spark.sql.session.timeZone", "UTC")
         # AQE: runtime coalescing + skew handling (SURVEY §4)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -52,16 +65,10 @@ def get_spark(
         # Arrow everywhere for pandas UDFs (no per-row Python)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # parquet physical layout (reference: snappy, dynamic overwrite)
+        # parquet physical layout (reference: snappy)
         .config("spark.sql.parquet.compression.codec", "snappy")
-        # INT64 micros, not legacy INT96: INT96 carries NO footer min/max
-        # stats, which would blind both parquet predicate pushdown on
-        # timestamps and the sink manifests' event-time envelopes (the
-        # data-skipping index for read_time_range)
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # catalog tables (bucketed layouts — sources/bucketed.py) land
-        # under the gitignored data root, never the process CWD
+        # the catalog's warehouse lands under the gitignored data root,
+        # never the process CWD
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get(
@@ -80,7 +87,7 @@ def get_spark(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**SINK_SQL_CONF, **(extra_conf or {})}.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -126,9 +126,7 @@ class PipelineHandles:
         one snapshot (``ParquetMergeSink.compact``). Call only while the
         pipeline's queries are stopped — compaction coordinates with the
         commit log, not with in-flight foreachBatch writers. Sinks without
-        a ``compact`` method (e.g. ``IcebergMergeSink``, whose maintenance
-        is Iceberg's own rewrite_data_files / expire_snapshots) are
-        skipped, preserving the drop-in sink contract. Silver is folded
+        a ``compact`` method are skipped. Silver is folded
         only through the batch every gold checkpoint in the work dir has
         committed: a delta a gold query has not read yet must stay live
         for it, whether or not this run started that query."""

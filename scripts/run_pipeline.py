@@ -52,6 +52,7 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from crypto_near_real_time_data_ingestion_spark.session import SINK_SQL_CONF
     from crypto_near_real_time_data_ingestion_spark.streaming.engine import (
         run_pipeline_to_completion,
         start_pipeline,
@@ -60,9 +61,11 @@ def main() -> int:
         MetricsListener,
     )
 
-    # on a cluster, master/conf come from spark-submit; just get the session
+    # master and cluster confs come from spark-submit; the confs the sinks'
+    # correctness depends on are the engine's, not the submitter's
     spark = SparkSession.builder.appName("transcript-medallion-stream").getOrCreate()
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    for k, v in SINK_SQL_CONF.items():
+        spark.conf.set(k, v)
 
     listener = MetricsListener(jsonl_path=args.metrics_jsonl)
     spark.streams.addListener(listener)

@@ -32,51 +32,6 @@ def test_oracle_keys_subset_of_queries():
     assert set(q) == set(o)
 
 
-def test_bench_json_line_fits_driver_tail():
-    """The round driver keeps only the LAST 2000 chars of bench.py
-    stdout and parses the result JSON out of that tail — round 2's line
-    overflowed the window and the driver recorded ``parsed: null``.
-    Rebuild the line bench.py prints (same keys, compact separators,
-    worst-case numeric widths) over the LIVE registry, so adding a
-    query that would push the line past the window fails here instead
-    of silently costing the round its BENCH artifact."""
-    import json
-
-    names = ["streaming_drain_total", *entry.queries()]
-    result = {
-        "metric": "bench_total",
-        "value": 99999.99,
-        "unit": "sec",
-        # realistic-worst per-query width: the costliest entry ever
-        # recorded is the 105 s drain total; bench.py rounds per-query
-        # timings to ONE decimal (0.1 s line-item resolution), so 999.9
-        # (5 chars) bounds it
-        "queries": {n: 999.9 for n in names},
-        "sf": 0.1,
-        # mirror of bench.py main()'s streaming block, worst-case widths
-        "streaming": {
-            "bench_turns": 8000000,
-            "cores_N": 32,
-            "cores_4N": 128,
-            "turns_per_sec_N": 999999.9,
-            "turns_per_sec_4N": 999999.9,
-            "samples_N": [999999.9] * 3,
-            "samples_4N": [999999.9] * 3,
-            "scaling_efficiency": 1.063,
-            "turns_per_sec_peak": 999999.9,
-            "peak_cores": 32,
-            "p99_batch_latency_s_N": 999.999,
-            "p99_batch_latency_s_4N": 999.999,
-            "p99_batch_latency_s_small_batches": 999.999,
-        },
-    }
-    line = json.dumps(result, separators=(",", ":"))
-    assert len(line) <= 1900, (
-        f"bench JSON line projects to {len(line)} chars — the driver's "
-        "2000-char stdout tail will clip it; retire a query or shorten keys"
-    )
-
-
 def test_events_props_parse(spark):
     from crypto_near_real_time_data_ingestion_spark.plans import events_gold as eg
 

@@ -186,7 +186,7 @@ def test_streaming_oracle_twin_matches_batch(spark, transcripts_parquet):
 def test_value_bins_exact_past_2_53(spark):
     """Exact long floor division: double division rounds values near
     2^53+ into the wrong bin while SQL // (and the pmod+div form now
-    shipped) stays exact (the range_join module-note trap; r5 review)."""
+    shipped) stays exact (r5 review)."""
     import duckdb
     import pandas as pd
 

@@ -145,21 +145,6 @@ def test_ohlc_view_branch_pruning(spark):
     assert plan.count("FileScan parquet") == 1, plan[:800]
 
 
-def test_salted_agg_two_phase_plan(spark, transcripts_parquet):
-    """The salted variant must actually BE two-phase: a shuffle on
-    (window, conv_id, salt) spreading the hot key, then a shuffle on
-    (window, conv_id) moving only n_salts partial rows per group."""
-    from crypto_near_real_time_data_ingestion_spark.operators.skew import (
-        conv_window_stats_salted,
-    )
-
-    silver = silver_batch(read_transcripts(spark, transcripts_parquet))
-    plan = _plan(conv_window_stats_salted(silver, "hour", n_salts=8))
-    assert "__salt" in plan, "salt column must reach the physical plan"
-    # dedup exchange + salted-partial exchange + final merge exchange
-    assert plan.count("Exchange hashpartitioning") == 3, plan.count("Exchange")
-
-
 def test_doc_chunks_no_shuffle(spark):
     """Chunk fan-out is pure map-side Catalyst (posexplode+slice): no
     Exchange, no Python runner in the plan."""

@@ -9,7 +9,6 @@ guard that registration stays inside the graded window:
   retired twin                    | pytest home
   --------------------------------+----------------------------------
   gold_conv_features (Catalyst)   | test_rolling_vectorized.py
-  gold_window_stats_hour_salted   | test_skew.py
   sql_view_gold_hour              | test_entry_contract.py
   doc_langid                      | test_documents_ops.py
   emb_cosine_topk_exprs           | test_documents_ops.py

@@ -5,6 +5,7 @@ tiny stream, and checks the sink."""
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import subprocess
@@ -56,3 +57,18 @@ def test_spark_submit_pyfiles(transcripts_parquet, stream_parquet_dir):
     # gold read silver's committed deltas through the sink_commits
     # source, loaded from the zip alone
     assert len(os.listdir(os.path.join(work, "tables", "gold_hour", "_commits"))) > 0
+    # the script's own session writes INT64-micros timestamps, whose footer
+    # min/max feed the manifests' event-time envelopes (INT96 has none)
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    files = glob.glob(os.path.join(work, "tables", "silver", "data", "batch-*", "*.parquet"))
+    assert files
+    for f in files:
+        pf = pq.ParquetFile(f)
+        ts_type = pf.schema_arrow.field("ts").type
+        assert pa.types.is_timestamp(ts_type) and ts_type.unit == "us", (f, ts_type)
+        i = pf.metadata.schema.names.index("ts")
+        for rg in range(pf.metadata.num_row_groups):
+            st = pf.metadata.row_group(rg).column(i).statistics
+            assert st is not None and st.has_min_max, f
