@@ -29,6 +29,16 @@ LOADED_BY_PATH = {
     f"{PKG}._pb_shim.sitecustomize",
 }
 
+# unreached kernels kept with their oracle tests until a later pruning;
+# the list may only shrink: an entry whose module is deleted or becomes
+# reachable fails the test
+PRUNING_DEFERRED = {
+    f"{PKG}.operators.bpe",
+    f"{PKG}.operators.drift",
+    f"{PKG}.operators.fingerprint",
+    f"{PKG}.operators.kmeans",
+}
+
 
 def _module_name(path: str) -> str:
     name = os.path.relpath(path, REPO)[: -len(".py")].replace(os.sep, ".")
@@ -81,7 +91,8 @@ def test_every_package_module_is_reachable():
             seen.add(m)
             todo.extend(_imports(MODULES[m]))
     assert LOADED_BY_PATH <= set(MODULES), "stale LOADED_BY_PATH entry"
-    unreachable = sorted(set(MODULES) - seen - LOADED_BY_PATH)
+    assert PRUNING_DEFERRED <= set(MODULES) - seen, "stale PRUNING_DEFERRED entry"
+    unreachable = sorted(set(MODULES) - seen - LOADED_BY_PATH - PRUNING_DEFERRED)
     assert not unreachable, (
         f"package modules that neither the engine, the registry, perfbench "
         f"nor the spark-submit scripts import: {unreachable}"
