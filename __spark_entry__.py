@@ -75,14 +75,6 @@ from crypto_near_real_time_data_ingestion_spark.plans import gold_windows  # noq
 from crypto_near_real_time_data_ingestion_spark.plans import patterns  # noqa: E402
 from crypto_near_real_time_data_ingestion_spark.plans import silver as silver_plan  # noqa: E402
 from crypto_near_real_time_data_ingestion_spark.sources import read_transcripts  # noqa: E402
-from crypto_near_real_time_data_ingestion_spark.streaming import (  # noqa: E402
-    stateful_tws as tws_mod,
-)
-
-# evaluated at IMPORT time, before the driver builds its SparkSession:
-# tws_available() exports the protobuf-shim PYTHONPATH that the TWS
-# python workers need (the JVM snapshots the env at launch)
-_TWS_AVAILABLE = tws_mod.tws_available()
 
 # The driver's correctness gate runs at sf=0.01; materialize that scale's
 # transcripts (and the smoke scale) eagerly so oracle SQL paths exist.
@@ -177,21 +169,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     (round 4, for events_pivot's slot: the same events_ohlc plan stays
     driver-graded at week grain through the S13 view entry
     sql_view_ohlc_week; the hour grain is oracle-pinned in
-    test_retired_twins::test_events_ohlc_hour_oracle), streaming_gold_day
-    (round 4, for events_funnel_daily's slot: same parameterized plan as
-    the graded streaming_gold_hour; drained day sink bit-equal-pinned vs
-    batch in test_streaming_e2e::test_stream_gold_day_equals_batch, batch
-    day plan DuckDB-oracled in test_gold_plans — it also leaves the
-    shared drain, which pytest now covers in its own drain),
-    events_unpivot (round 4, for streaming_funnel's slot: the wide→long
-    melt stays oracle-pinned in
-    test_retired_twins::test_events_unpivot_oracle and its inverse
-    events_pivot is driver-graded), gold_conv_features_arrow (round 5,
-    for doc_line_dedup's slot: the IDENTICAL conv-features oracle
-    template stays driver-graded TWICE via streaming_conv_features and
-    streaming_conv_features_tws; the Arrow batch path stays bit-equal-
-    pinned to the Catalyst twin in test_rolling_vectorized, which is
-    itself DuckDB-oracled in test_gold_plans), gold_tool_bursts (round
+    test_retired_twins::test_events_ohlc_hour_oracle), events_unpivot
+    (round 4, for streaming_funnel's slot: the wide→long melt stays
+    oracle-pinned in test_retired_twins::test_events_unpivot_oracle and
+    its inverse events_pivot is driver-graded), gold_conv_features_arrow
+    (round 5, for doc_line_dedup's slot: the IDENTICAL conv-features
+    oracle template stays driver-graded via streaming_conv_features; the
+    Arrow batch path stays bit-equal-pinned to the Catalyst twin in
+    test_rolling_vectorized, which is itself DuckDB-oracled in
+    test_gold_plans), gold_tool_bursts (round
     5, for doc_dedup_spans' slot: the same parameterized
     ROLE_RUNS_ORACLE_SQL_TEMPLATE stays driver-graded via
     streaming_role_runs (role='user'); the tool-burst variant is
@@ -239,9 +225,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["events_pivot"] = lambda s, d: olap_plan.events_pivot(eg.read_events(s, d))
     # k-step conversion funnel over chained FORWARD as-of joins
     # (operators/funnel.py — earliest strictly-later match within a
-    # per-step horizon; one keyed shuffle per step, no pair blowup);
-    # takes streaming_gold_day's slot (same parameterized path as the
-    # graded streaming_gold_hour — see the retirement table)
+    # per-step horizon; one keyed shuffle per step, no pair blowup)
     q["events_funnel_daily"] = lambda s, d: funnel_op.events_funnel_daily(
         eg.read_events(s, d)
     )
@@ -358,9 +342,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # same oracle template stays driver-graded via streaming_pairs, and the
     # batch join stays pytest-graded in test_gold_plans.py)
     # (gold_conv_features_arrow retired round 5 for doc_line_dedup's
-    # slot: the conv-features oracle template stays driver-graded twice
-    # via streaming_conv_features + _tws; the Arrow path stays bit-equal
-    # to the Catalyst twin in test_rolling_vectorized)
+    # slot: the conv-features oracle template stays driver-graded via
+    # streaming_conv_features; the Arrow path stays bit-equal to the
+    # Catalyst twin in test_rolling_vectorized)
 
     # --- CEP-style sequence patterns (north-rule "CEP") --------------------
     # (gold_tool_bursts retired round 5 for doc_dedup_spans' slot, and
@@ -372,10 +356,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # arrival-ordered stream), checked against the SAME batch oracles ------
     q["streaming_silver"] = lambda s, d: _run_streaming(s, d, "silver")
     q["streaming_gold_hour"] = lambda s, d: _run_streaming(s, d, "gold_hour")
-    # (streaming_gold_day retired round 4 for events_funnel_daily's slot:
-    # same parameterized plan as the graded hour grain; the drained day
-    # sink stays bit-equal-pinned vs batch in test_streaming_e2e and the
-    # batch day plan stays DuckDB-oracled in test_gold_plans)
+    q["streaming_gold_day"] = lambda s, d: _run_streaming(s, d, "gold_day")
     q["streaming_gold_sliding"] = lambda s, d: _run_streaming(s, d, "gold_sliding")
     q["streaming_sessions_30m"] = lambda s, d: _run_streaming(s, d, "sessions").select(
         "conv_id", "session_start", "session_end", "n_turns", "n_tool_calls"
@@ -402,12 +383,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # windowed aggregate groups on the dimension's column, and the oracle
     # inlines the dimension as VALUES
     q["streaming_enriched_hour"] = lambda s, d: _run_streaming(s, d, "enriched_hour")
-    # second stateful backend (Spark 4 transformWithStateInPandas) run
-    # end-to-end — gated on the protobuf runtime (present here via the
-    # documented SDK shim); its own drain so an environment failure
-    # cannot touch the other streaming entries
-    if _TWS_AVAILABLE:
-        q["streaming_conv_features_tws"] = _run_streaming_tws
 
     # --- reference gold programs on the driver-provided events table
     # (W1/W2 keep-latest, A1 QA agg, W5-W10+A2+J1/J2 ML features) -----------
@@ -498,11 +473,10 @@ def _sql_view_gold_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # all streaming entries share ONE drain of the arrival-ordered stream:
-# a single rate-controlled source feed with the 14 queries running
-# concurrently as 10 checkpointed jobs (silver+heavy_hitters+countmin,
+# a single rate-controlled source feed with the 15 queries running
+# concurrently as 11 checkpointed jobs (silver+heavy_hitters+countmin,
 # gold_hour+rank, and pairs+latency_hist each fold into one query with
-# per-sink commit logs; gold_day left with its retired registry entry —
-# pytest drains it in test_streaming_e2e)
+# per-sink commit logs)
 # — the reference's sequential-DAG analog as one continuous pipeline
 # (and 10× cheaper than per-query drains in the driver's verify/bench
 # loop). Results are
@@ -510,7 +484,7 @@ def _sql_view_gold_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sound; the key is the session's applicationId (stable, never reused,
 # unlike id(spark) which CPython can recycle after GC).
 _STREAM_QUERIES = (
-    "silver", "gold_hour", "gold_hour_rank", "gold_sliding",
+    "silver", "gold_hour", "gold_hour_rank", "gold_day", "gold_sliding",
     "sessions", "pairs", "latency_hist", "features", "unanswered",
     "role_runs", "tool_asof", "heavy_hitters", "countmin", "enriched_hour",
 )
@@ -525,74 +499,11 @@ def _fast_tmp() -> str:
     return "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
 
 
-def _flushed_src(sf: float) -> str:
-    """Flushed copy of the arrival-ordered stream source, SHARED by the
-    15-query drain and the TWS drain (built once per sf, outside any
-    drain's work dir so neither drain's cleanup removes it)."""
-    from crypto_near_real_time_data_ingestion_spark.datagen.flush import (
-        build_flushed_source,
-    )
-    from crypto_near_real_time_data_ingestion_spark.datagen.transcripts import (
-        stream_dir,
-    )
-
-    ensure_transcripts(sf)
-    return build_flushed_source(
-        stream_dir(sf), f"{_fast_tmp()}/spark_graft_entry_src_{sf}"
-    )
-
-
 def _sql_view_ohlc_week(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grain-filter view over the unified multi-grain OHLC table — the
     reference's Athena view layer (S13)."""
     eg.register_ohlc_views(spark, eg.read_events(spark, sf_dir))
     return spark.sql("SELECT * FROM gold_ohlc_week")
-
-
-def _run_streaming_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Drain the transformWithState backend in ITS OWN pipeline (separate
-    work dir/checkpoints from the shared 15-query drain, but REUSING that
-    drain's flushed source copy) and return the causal feature columns —
-    same oracle as streaming_conv_features. maxFilesPerTrigger is sized
-    to the source's data-file count so the drain runs the MINIMAL two
-    micro-batches (all data, then the sentinel flush file, whose mtime
-    the builder sets last): the TWS state-server round-trips (per key
-    per batch over the pure-python protobuf shim) are this drain's fixed
-    cost, and watermark-faithful results are batch-granularity-
-    independent (the oracle proves it)."""
-    import glob
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from crypto_near_real_time_data_ingestion_spark.datagen.flush import FLUSH_CONV_ID
-    from crypto_near_real_time_data_ingestion_spark.streaming.engine import (
-        run_pipeline_to_completion,
-    )
-
-    sf = sf_from_dir(sf_dir)
-    key = (spark.sparkContext.applicationId, sf, "tws")
-    h = _stream_cache.get(key)
-    if h is None:
-        fsrc = _flushed_src(sf)
-        n_data = len(glob.glob(os.path.join(fsrc, "part-*.parquet")))
-        work = f"{_fast_tmp()}/spark_graft_entry_stream_tws_{sf}"
-        shutil.rmtree(work, ignore_errors=True)
-        # state partitions track the session's cores (floor 8, cap 32):
-        # the TWS state-server round-trips are this drain's fixed cost
-        # and parallelize across state partitions — measured at sf0.1 on
-        # a 32-core session: 62.5 s at 8 partitions vs 33.9 s at 32,
-        # identical results (keyed-state semantics are partition-count
-        # independent, which the oracle proves on every run)
-        parts = max(8, min(32, spark.sparkContext.defaultParallelism))
-        h = run_pipeline_to_completion(
-            spark, fsrc, work, queries=("features_tws",),
-            max_files_per_trigger=max(1, n_data), shuffle_partitions=parts,
-        )
-        _stream_cache[key] = h
-    return h.sinks["features_tws"].read(spark).filter(
-        F.col("conv_id") != FLUSH_CONV_ID
-    )
 
 
 def _run_streaming_latency_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -811,11 +722,19 @@ def _run_streaming_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def drain_streams(spark: SparkSession, sf_dir: str) -> object:
-    """Run (once per session+sf, cached) the shared 14-query streaming
-    drain and return its handles, from which the registry entries of
-    that drain read their sinks."""
+    """Run (once per session+sf, cached) the shared 15-query streaming
+    drain over a flushed copy of the arrival-ordered stream (built once
+    per sf, outside the drain's work dir so its cleanup keeps it) and
+    return its handles, from which the registry entries of that drain
+    read their sinks."""
     import shutil
 
+    from crypto_near_real_time_data_ingestion_spark.datagen.flush import (
+        build_flushed_source,
+    )
+    from crypto_near_real_time_data_ingestion_spark.datagen.transcripts import (
+        stream_dir,
+    )
     from crypto_near_real_time_data_ingestion_spark.streaming.engine import (
         run_pipeline_to_completion,
     )
@@ -824,7 +743,10 @@ def drain_streams(spark: SparkSession, sf_dir: str) -> object:
     key = (spark.sparkContext.applicationId, sf)
     h = _stream_cache.get(key)
     if h is None:
-        fsrc = _flushed_src(sf)
+        ensure_transcripts(sf)
+        fsrc = build_flushed_source(
+            stream_dir(sf), f"{_fast_tmp()}/spark_graft_entry_src_{sf}"
+        )
         work = f"{_fast_tmp()}/spark_graft_entry_stream_{sf}"
         shutil.rmtree(work, ignore_errors=True)
         # 8 shuffle partitions for the verification-scale drain: state
@@ -939,6 +861,9 @@ def oracle_sql() -> dict[str, str]:
         "streaming_gold_hour": gold_windows.WINDOW_STATS_ORACLE_SQL_TEMPLATE.format(
             path=path, grain="hour"
         ),
+        "streaming_gold_day": gold_windows.WINDOW_STATS_ORACLE_SQL_TEMPLATE.format(
+            path=path, grain="day"
+        ),
         # W10 streaming: per-window dense ranks computed in foreachBatch
         # answer the batch rank over the same hour-grain window stats
         "streaming_rank": gold_windows.WINDOW_RANK_ORACLE_SQL_TEMPLATE.format(
@@ -983,22 +908,6 @@ def oracle_sql() -> dict[str, str]:
                     path=path, gap_s=1800
                 )
             )
-        ),
-        **(
-            {
-                "streaming_conv_features_tws": (
-                    "SELECT conv_id, turn_idx, as_of_ts, turn_count, max_turn_idx, "
-                    "tool_call_rate, inter_turn_latency_p50, inter_turn_latency_p95, "
-                    "inter_turn_latency_p99, rolling_turns_10m, session_id, session_start "
-                    "FROM ({inner}) t".format(
-                        inner=gold_features.CONV_FEATURES_ORACLE_SQL_TEMPLATE.format(
-                            path=path, gap_s=1800
-                        )
-                    )
-                )
-            }
-            if _TWS_AVAILABLE
-            else {}
         ),
         "doc_exact_dedup": dg.DOC_EXACT_DEDUP_ORACLE_SQL,
         "streaming_countmin": cm_op.STREAM_CMS_ORACLE_SQL_TEMPLATE.format(

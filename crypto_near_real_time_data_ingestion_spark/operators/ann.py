@@ -305,27 +305,6 @@ def _score_candidates(emb: DataFrame, cand: DataFrame) -> DataFrame:
     return j.mapInPandas(score, schema=SCORED_SCHEMA)
 
 
-def _threshold_pair_emit(threshold: float):
-    """Shared above-threshold pair emit for ``_block_pair_scores``:
-    round-half-away(6) BEFORE comparing (the grid every exact twin and
-    oracle shares) and the qi < ci canonical mask (dedups self-join
-    tiles and orients pairs). Used by ``broadcast_near_dup_pairs`` — one
-    definition, so a rounding or canonical-order fix can never diverge
-    the family."""
-
-    def emit(qi: np.ndarray, ci: np.ndarray, sims: np.ndarray):
-        sims = _round6_half_away(sims)
-        keep = (qi[:, None] < ci[None, :]) & (sims >= threshold)
-        r, c = np.nonzero(keep)
-        if not len(r):
-            return None
-        return pd.DataFrame(
-            {"vec_id": qi[r], "neighbor_id": ci[c], "cosine": sims[r, c]}
-        )
-
-    return emit
-
-
 def broadcast_near_dup_pairs(
     emb: DataFrame,
     threshold: float = 0.45,
@@ -361,7 +340,19 @@ def broadcast_near_dup_pairs(
         < (F.col("c_block_id") + F.lit(1)) * F.lit(block_size),
     )
 
-    return _block_pair_scores(tiles, _threshold_pair_emit(threshold)).select(
+    # round-half-away(6) BEFORE comparing (the grid every exact twin and
+    # oracle shares); qi < ci dedups self-join tiles and orients pairs
+    def emit(qi: np.ndarray, ci: np.ndarray, sims: np.ndarray):
+        sims = _round6_half_away(sims)
+        keep = (qi[:, None] < ci[None, :]) & (sims >= threshold)
+        r, c = np.nonzero(keep)
+        if not len(r):
+            return None
+        return pd.DataFrame(
+            {"vec_id": qi[r], "neighbor_id": ci[c], "cosine": sims[r, c]}
+        )
+
+    return _block_pair_scores(tiles, emit).select(
         F.col("vec_id").alias("vec_id_1"),
         F.col("neighbor_id").alias("vec_id_2"),
         "cosine",

@@ -11,9 +11,9 @@ Scale notes (100 TB / 1000-executor design intent):
     replace hand-tuned partition counts.
   * ``shuffle.partitions`` here is a local-mode ceiling; on a real
     cluster it should be ~2-3x total cores and AQE coalesces down.
-  * RocksDB state store for streaming keyed state (bounded memory at
-    10^12-turn scale); falls back silently to HDFS-backed store in
-    environments without the RocksDB JNI (local tests keep default).
+  * Streaming keyed state uses Spark's default HDFS-backed state
+    store; at 10^12-turn scale, RocksDB's provider class passed through
+    ``extra_conf`` bounds its memory.
 """
 
 from __future__ import annotations
@@ -48,7 +48,6 @@ def get_spark(
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    use_rocksdb_state: bool = False,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine."""
     cores = cores or DEFAULT_CPUS
@@ -82,11 +81,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
-    if use_rocksdb_state:
-        b = b.config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
     for k, v in {**SINK_SQL_CONF, **(extra_conf or {})}.items():
         b = b.config(k, v)
     spark = b.getOrCreate()

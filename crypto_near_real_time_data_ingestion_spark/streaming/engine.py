@@ -27,8 +27,6 @@ sinks, each sink exactly-once via its own commit log.
 Queries reading bronze (each scans the source itself):
   silver      raw → cleanse → dropDuplicatesWithinWatermark → MERGE
   features    cleansed bronze → per-conv stateful rolling features → MERGE
-  features_tws  same semantics on the Spark 4 transformWithState API
-                (typed state variables + event-time timers, RocksDB)
   role_runs   CEP R{k,} pattern: stateful run detector, runs emitted on
               definitive closure (role change / eviction flush) → MERGE
   tool_asof   streaming as-of join: latest tool call ≤ each turn's ts
@@ -125,19 +123,16 @@ class PipelineHandles:
         """Sink maintenance between runs: fold every sink's delta pile into
         one snapshot (``ParquetMergeSink.compact``). Call only while the
         pipeline's queries are stopped — compaction coordinates with the
-        commit log, not with in-flight foreachBatch writers. Sinks without
-        a ``compact`` method are skipped. Silver is folded
-        only through the batch every gold checkpoint in the work dir has
-        committed: a delta a gold query has not read yet must stay live
-        for it, whether or not this run started that query."""
+        commit log, not with in-flight foreachBatch writers. Silver is
+        folded only through the batch every gold checkpoint in the work
+        dir has committed: a delta a gold query has not read yet must stay
+        live for it, whether or not this run started that query."""
         if any(q.isActive for q in self.queries.values()):
             raise RuntimeError("compact_all requires all queries stopped")
         consumed = [_consumed_batch(c) for c in self.silver_readers.values()]
         consumed = [b for b in consumed if b is not None]
         out = {}
         for name, s in self.sinks.items():
-            if not callable(getattr(s, "compact", None)):
-                continue
             if name == "silver" and consumed:
                 out[name] = s.compact(spark, upto=min(consumed))
             else:
@@ -175,14 +170,8 @@ def _batch_lineage(checkpoint: str, batch_id: int) -> dict:
         return {"source": json.loads(f.read().splitlines()[2])}
 
 
-def _sink_max_committed(sink) -> int:
-    through = -1
-    if callable(getattr(sink, "compacted_through", None)):
-        through = sink.compacted_through()
-    live = []
-    if callable(getattr(sink, "committed_batches", None)):
-        live = sink.committed_batches()
-    return max([through, *live], default=-1)
+def _sink_max_committed(sink: ParquetMergeSink) -> int:
+    return max([sink.compacted_through(), *sink.committed_batches()])
 
 
 def _check_sink_alignment(checkpoint: str, name: str, sink, extra_sinks) -> None:
@@ -203,7 +192,7 @@ def _check_sink_alignment(checkpoint: str, name: str, sink, extra_sinks) -> None
         if have < required:
             raise RuntimeError(
                 f"query '{name}': checkpoint has committed batch "
-                f"{required} but sink {getattr(s, 'table_dir', s)} has "
+                f"{required} but sink {s.table_dir} has "
                 f"only committed through {have} — those batches will "
                 "never be replayed, so resuming would silently lose "
                 "them at this sink. Use a fresh work_dir (or backfill "
@@ -362,7 +351,7 @@ def _start_queries(
     # would otherwise be silently skipped (and even persisted into the
     # wiring sidecar) while the caller believes its table is produced
     known = GOLD_LAYER | {
-        "silver", "features", "features_tws", "role_runs", "tool_asof",
+        "silver", "features", "role_runs", "tool_asof",
         "heavy_hitters", "countmin", "hll", "hll_hour",
     }
     unknown = [q for q in queries if q not in known]
@@ -641,44 +630,6 @@ def _start_queries(
         h.queries["role_runs"] = _start(
             role_runs_stream(cleansed, role="user", min_run=2),
             sink, "role_runs", ckpt("role_runs"), "append", available_now,
-            trigger_interval,
-        )
-
-    if "features_tws" in queries:
-        from ..functions.cleansing import cleanse_turns
-        from .stateful_tws import conv_features_stream_tws, tws_available
-
-        if not tws_available():
-            raise RuntimeError(
-                "transformWithState needs the google.protobuf runtime "
-                "(no wheel installed and no SDK-bundle fallback found); "
-                "use the 'features' query (applyInPandasWithState) instead"
-            )
-        # the TWS python workers read PYTHONPATH from the function env
-        # (sc.environment), which ALSO works when the SparkSession was
-        # built before tws_available() exported the shim path — merge it
-        # in so import order never matters
-        want = os.environ.get("PYTHONPATH", "")
-        if want:
-            env = spark.sparkContext.environment
-            cur = env.get("PYTHONPATH", "")
-            parts = [p for p in cur.split(":") if p]
-            parts += [p for p in want.split(":") if p and p not in parts]
-            env["PYTHONPATH"] = ":".join(parts)
-
-        # transformWithState requires the RocksDB state store; session-wide
-        # runtime conf, picked up by queries at start time
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        cleansed = cleanse_turns(src()).withWatermark("ts", watermark)
-        sink = ParquetMergeSink(table("features_tws"), ["conv_id", "turn_idx"], None)
-        h.sinks["features_tws"] = sink
-        h.queries["features_tws"] = _start(
-            conv_features_stream_tws(cleansed),
-            sink, "features_tws", ckpt("features_tws"), "append", available_now,
             trigger_interval,
         )
 

@@ -176,9 +176,8 @@ def _step(
     wm_us: int,
     gap_s: int,
 ) -> tuple[tuple, tuple | None, int | None]:
-    """Pure ingest+emit core of one conversation, shared by both stateful
-    backends (``applyInPandasWithState`` here, via the bucket function,
-    and ``transformWithStateInPandas``).
+    """Pure ingest+emit core of one conversation, called per conversation
+    by the ``applyInPandasWithState`` bucket function.
 
     Takes the batch's rows as numpy columns (``turn_idx``, event time in
     µs, has-tool flag; arrival order) and the 12-field state tuple

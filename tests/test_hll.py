@@ -140,7 +140,7 @@ def test_hll_windowed_registers_bit_equal_per_window_builds(spark, transcripts_p
     )
     from crypto_near_real_time_data_ingestion_spark.sources import read_transcripts
 
-    turns = read_transcripts(spark, transcripts_parquet).repartition(16)
+    turns = read_transcripts(spark, transcripts_parquet).repartition(16).persist()
     got = {
         (r["window_start"], r["bucket"]): r["rho"]
         for r in hll_windowed_build(turns, "conv_id", "ts", "1 hour", p=8).collect()
@@ -153,9 +153,11 @@ def test_hll_windowed_registers_bit_equal_per_window_builds(spark, transcripts_p
     ]
     want = {}
     for w in windows:
-        slice_df = turns.filter(F.window("ts", "1 hour").start == w)
+        # one task per window: a slice is a few hundred rows
+        slice_df = turns.filter(F.window("ts", "1 hour").start == w).coalesce(1)
         for b, rho in _regs_dict(hll_build(slice_df, "conv_id", p=8)).items():
             want[(w, b)] = rho
+    turns.unpersist()
     assert got == want
 
 

@@ -22,23 +22,6 @@ ROOTS = [
     os.path.join(REPO, "scripts", "make_pyfiles.py"),
 ]
 
-# modules no import statement names, with how they are loaded
-LOADED_BY_PATH = {
-    # `site` auto-imports it in Spark's Python workers once
-    # streaming/stateful_tws.py puts its directory on their PYTHONPATH
-    f"{PKG}._pb_shim.sitecustomize",
-}
-
-# unreached kernels kept with their oracle tests until a later pruning;
-# the list may only shrink: an entry whose module is deleted or becomes
-# reachable fails the test
-PRUNING_DEFERRED = {
-    f"{PKG}.operators.bpe",
-    f"{PKG}.operators.drift",
-    f"{PKG}.operators.fingerprint",
-    f"{PKG}.operators.kmeans",
-}
-
 
 def _module_name(path: str) -> str:
     name = os.path.relpath(path, REPO)[: -len(".py")].replace(os.sep, ".")
@@ -90,9 +73,7 @@ def test_every_package_module_is_reachable():
         if m not in seen:
             seen.add(m)
             todo.extend(_imports(MODULES[m]))
-    assert LOADED_BY_PATH <= set(MODULES), "stale LOADED_BY_PATH entry"
-    assert PRUNING_DEFERRED <= set(MODULES) - seen, "stale PRUNING_DEFERRED entry"
-    unreachable = sorted(set(MODULES) - seen - LOADED_BY_PATH - PRUNING_DEFERRED)
+    unreachable = sorted(set(MODULES) - seen)
     assert not unreachable, (
         f"package modules that neither the engine, the registry, perfbench "
         f"nor the spark-submit scripts import: {unreachable}"

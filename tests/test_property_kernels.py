@@ -1,8 +1,6 @@
 """Hypothesis properties for the pure-numpy kernels that grade-critical
 paths stand on (no Spark session — these run hundreds of examples):
 
-- the BPE vectorized merge pass vs a brute-force greedy left-to-right
-  reference (incl. a == b runs and cross-word boundaries);
 - ``ann._round6_half_away`` vs decimal ROUND_HALF_UP — the grid every
   cosine oracle comparison happens on;
 - ``bloom._test_bits`` vs a per-bit python reference (signed int64
@@ -22,35 +20,6 @@ from hypothesis import strategies as st
 
 from crypto_near_real_time_data_ingestion_spark.operators.ann import _round6_half_away
 from crypto_near_real_time_data_ingestion_spark.operators.bloom import _test_bits
-from crypto_near_real_time_data_ingestion_spark.operators.bpe import _apply_merge_batch
-
-sym = st.sampled_from(["a", "b", "c", "ab", "bb", "a</w>", "b</w>"])
-word = st.lists(sym, min_size=1, max_size=8)
-
-
-def _merge_word_reference(syms: list, a: str, b: str) -> list:
-    """Brute-force greedy left-to-right single merge pass on one word."""
-    out, i = [], 0
-    while i < len(syms):
-        if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-            out.append(a + b)
-            i += 2
-        else:
-            out.append(syms[i])
-            i += 1
-    return out
-
-
-@settings(max_examples=300, deadline=None)
-@given(st.lists(word, min_size=0, max_size=6), sym, sym)
-def test_bpe_merge_batch_matches_reference(words, a, b):
-    arr = np.empty(len(words), dtype=object)
-    for i, w in enumerate(words):
-        arr[i] = list(w)
-    got, changed = _apply_merge_batch(arr, a, b)
-    want = [_merge_word_reference(w, a, b) for w in words]
-    assert [list(g) for g in got] == want
-    assert changed == any(want[i] != words[i] for i in range(len(words)))
 
 
 @settings(max_examples=500, deadline=None)

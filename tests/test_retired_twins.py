@@ -47,19 +47,14 @@ guard that registration stays inside the graded window:
   events_ohlc_hour (round 4, for  | HERE (the events_ohlc plan stays
     events_pivot's slot)          |   driver-graded at week grain via
                                   |   sql_view_ohlc_week)
-  streaming_gold_day (round 4,    | test_streaming_e2e (drained day sink
-    for events_funnel_daily's     |   bit-equal vs batch) +
-    slot)                         |   test_gold_plans (batch day oracle);
-                                  |   same parameterized plan as the
-                                  |   graded streaming_gold_hour
   events_unpivot (round 4, for    | HERE (melt oracle; the inverse
     streaming_funnel's slot)      |   events_pivot is driver-graded)
   gold_conv_features_arrow        | test_rolling_vectorized (bit-equal
     (round 5, doc_line_dedup's    |   to the Catalyst twin, itself
     slot)                         |   oracled in test_gold_plans); the
                                   |   IDENTICAL oracle template stays
-                                  |   driver-graded 2× via streaming_
-                                  |   conv_features + _tws
+                                  |   driver-graded via streaming_
+                                  |   conv_features
   gold_tool_bursts (round 5,      | HERE (role='tool' variant of the
     doc_dedup_spans' slot)        |   ROLE_RUNS template whose 'user'
                                   |   variant stays driver-graded via
@@ -93,13 +88,14 @@ def test_month_grain_oracle(spark, transcripts_parquet):
 
 
 def test_registration_stays_inside_graded_window():
-    """The driver grades the first ~50 entries of queries(): every
-    registered query must fit (CORRECTNESS must show a row for ALL of
-    them — round-2's last five fell outside and went ungraded)."""
+    """The driver grades the first 50 entries of queries(): the registry
+    holds exactly 50, so every registered query is graded (CORRECTNESS
+    must show a row for ALL of them — round-2's last five fell outside
+    and went ungraded) and no graded slot stands empty."""
     q = entry.queries()
-    assert len(q) <= 50, (
-        f"{len(q)} registered queries exceed the driver's ~50-entry graded "
-        "window — retire a twin to pytest before registering more"
+    assert len(q) == 50, (
+        f"{len(q)} registered queries, not the driver's 50-entry graded "
+        "window — a new entry takes a retired twin's slot"
     )
     # the round-2 casualties now register early enough to be graded even
     # if the window shrank slightly

@@ -249,23 +249,6 @@ def test_compaction_writes_lineage_manifest_and_gcs_folded_ones(spark, tmp_path)
     assert len(sink.manifests()) == 2
 
 
-def test_compact_all_skips_sinks_without_compact(spark, tmp_path):
-    """IcebergMergeSink (drop-in contract) has no compact() — Iceberg owns
-    its own maintenance; compact_all must skip, not crash mid-iteration."""
-    from crypto_near_real_time_data_ingestion_spark.streaming.engine import (
-        PipelineHandles,
-    )
-
-    class _NoCompactSink:
-        pass
-
-    h = PipelineHandles()
-    h.sinks["parquet"] = _mk_keyed(spark, tmp_path, "pq")
-    h.sinks["iceberg"] = _NoCompactSink()
-    res = h.compact_all(spark)
-    assert set(res) == {"parquet"} and res["parquet"]["through"] == 3
-
-
 def test_compact_with_zorder_layout(spark, tmp_path):
     """compact(zorder_by=…) must keep the read view bit-identical while
     laying the snapshot's FILES out on the Morton curve — measured from

@@ -466,3 +466,51 @@ def test_bucket_timer_tie_and_revival():
     assert timers[2]["A"] == a_timer  # tie: left alone, not re-armed
     assert "A" not in timers[3]  # fired below the watermark: evicted
     assert "A" in timers[4]  # revived by its new turn
+
+
+# --- planted unit checks of the `_step` core ------------------------------
+
+
+def _batch(ti_ts_tool):
+    return iter(
+        [
+            pd.DataFrame(
+                {
+                    "turn_idx": [t[0] for t in ti_ts_tool],
+                    "ts": pd.to_datetime([t[1] for t in ti_ts_tool], unit="us"),
+                    "tool": [t[2] for t in ti_ts_tool],
+                }
+            )
+        ]
+    )
+
+
+def _rows_step(conv_id, pdf_iter, st, wm_us, gap_s):
+    """``_step`` over an input-chunk iterator, output as row tuples."""
+    out, new_st, timer = _step(
+        conv_id, *_columns(_input_frame(pdf_iter)), st, wm_us, gap_s
+    )
+    return list(zip(*out)), new_st, timer
+
+
+def test_step_core_buffers_until_watermark():
+    """Rows past the watermark stay buffered with a wake-up timer;
+    nothing is emitted."""
+    out, st, timer = _rows_step("c", _batch([(0, 10_000_000, None)]), FEAT_EMPTY, 0, 1800)
+    assert out == [] and st is not None
+    assert timer == 10_000 + 1  # earliest buffered turn, ms
+    # watermark passes → emit in order, dedup against emitted set
+    out2, st2, _ = _rows_step(
+        "c", _batch([(0, 10_000_000, None), (1, 20_000_000, "grep")]), st,
+        25_000_000, 1800,
+    )
+    assert [r[1] for r in out2] == [0, 1]
+    assert st2[3] == [0, 1]  # emitted turn_idx set persisted
+
+
+def test_step_core_eviction():
+    """Watermark far past last activity → state evicted (None)."""
+    out, st, _ = _rows_step("c", _batch([(0, 1_000_000, None)]), FEAT_EMPTY, 2_000_000, 1800)
+    assert len(out) == 1
+    _, st2, timer = _rows_step("c", iter(()), st, 2_000_000 + 2 * 1800 * 1_000_000 + 1, 1800)
+    assert st2 is None and timer is None
