@@ -19,10 +19,11 @@ Gold queries run without no-data batches of their own, so their
 watermark and evictions follow silver's batches exactly. Requesting any
 gold query starts silver.
 
-Fold exception: when the members of a shared-plan group are requested
-(silver+heavy_hitters+countmin+hll+hll_hour, gold_hour+gold_hour_rank,
-pairs+latency_hist), the group runs as ONE query — one checkpoint, N
-sinks, each sink exactly-once via its own commit log.
+Folds (``FOLDS``): a member query shares its host's plan and always
+rides the host's query — heavy_hitters, countmin, hll and hll_hour ride
+silver, gold_hour_rank rides gold_hour, latency_hist rides pairs. The
+group runs as ONE query: one checkpoint, N sinks, each sink exactly-once
+via its own commit log. Requesting a member starts its host.
 
 Queries reading bronze (each scans the source itself):
   silver      raw → cleanse → dropDuplicatesWithinWatermark → MERGE
@@ -47,8 +48,8 @@ Queries reading bronze (each scans the source itself):
               state bounded by TIME not cardinality; late data folds
               into its window's registers idempotently — no watermark
               needed for correctness)
-  (the four sketch queries fold into silver when it runs, and
-  otherwise run their own cleanse + dedup over bronze)
+  (the four sketch queries are fold members of silver: they read
+  silver's deduped micro-batch, never bronze on their own)
 
 Gold-layer queries (read silver's committed deltas):
   gold_hour   tumbling 1h window agg → MERGE (append-on-close)
@@ -94,6 +95,14 @@ GOLD_LAYER = frozenset({
     "gold_hour", "gold_hour_rank", "gold_day", "gold_sliding", "sessions",
     "pairs", "latency_hist", "unanswered", "enriched_hour",
 })
+# fold member → host: the member's sink is fed from its host's
+# micro-batch (one checkpoint, one plan, N sinks); requesting a member
+# starts its host. A member's sink commit log keys on the host
+# checkpoint's batch ids, so it never has a checkpoint of its own.
+FOLDS = {
+    "heavy_hitters": "silver", "countmin": "silver", "hll": "silver",
+    "hll_hour": "silver", "gold_hour_rank": "gold_hour", "latency_hist": "pairs",
+}
 _NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
 
 
@@ -105,14 +114,9 @@ class PipelineHandles:
     # work dir, started in this run or not
     silver_readers: dict[str, str] = field(default_factory=dict)
 
-    def await_all(self, timeout_s: float | None = None) -> None:
-        # `is not None`, not truthiness: timeout_s=0 means "poll, don't
-        # block", which a falsy check would turn into blocking forever
+    def await_all(self) -> None:
         for q in self.queries.values():
-            if timeout_s is not None:
-                q.awaitTermination(timeout_s)
-            else:
-                q.awaitTermination()
+            q.awaitTermination()
 
     def stop_all(self) -> None:
         for q in self.queries.values():
@@ -180,10 +184,10 @@ def _check_sink_alignment(checkpoint: str, name: str, sink, extra_sinks) -> None
     ``commits`` log will NEVER be replayed, so a sink without it has
     lost that data permanently — which happens when a sink is attached
     to a checkpoint that advanced while the sink was absent (a fold
-    member added to an existing work_dir, or re-added after standalone
-    runs in between). The in-flight batch (``offsets`` ahead of
-    ``commits``) is exempt — restart replays it and each sink's own
-    commit log absorbs it exactly-once."""
+    member added to an existing work_dir, or the sink's table lost). The
+    in-flight batch (``offsets`` ahead of ``commits``) is exempt —
+    restart replays it and each sink's own commit log absorbs it
+    exactly-once."""
     required = _ckpt_latest(checkpoint, "commits")
     if required < 0:
         return
@@ -223,16 +227,12 @@ def _start(
     mode: str,
     available_now: bool,
     trigger_interval: str | None,
-    transform=None,
     extra_sinks=None,
     lineage: bool = False,
 ) -> StreamingQuery:
-    """``transform``: optional batch-DataFrame → batch-DataFrame function
-    applied inside foreachBatch BEFORE the sink — the hook for micro-
-    batch-local post-processing (e.g. W10's per-closed-window rank).
-
-    ``extra_sinks``: optional list of (sink, transform|None) fed from the
-    SAME micro-batch — the multi-sink fold. Queries that share one
+    """``extra_sinks``: optional list of (sink, transform) fed from the
+    SAME micro-batch, the transform mapping the batch DataFrame to the
+    sink's rows — the multi-sink fold (``FOLDS``). Queries that share one
     upstream plan (e.g. the hour aggregate feeding both the plain MERGE
     and the ranked sink) then pay that plan's state stores ONCE per
     batch instead of once per sink. Exactly-once holds per sink: each
@@ -252,23 +252,19 @@ def _start(
             sink.process_batch(bdf, bid)
 
     if extra_sinks:
-        prim_tr = transform
-
         def handler(bdf, bid):
             # persist: the batch plan (incl. any stateful upstream) must
             # not recompute per sink
             bdf.persist()
             try:
-                write(prim_tr(bdf) if prim_tr else bdf, bid)
+                write(bdf, bid)
                 for s, tr in extra_sinks:
-                    s.process_batch(tr(bdf) if tr else bdf, bid)
+                    s.process_batch(tr(bdf), bid)
             finally:
                 bdf.unpersist()
 
-    elif transform is None:
-        handler = write
     else:
-        handler = lambda bdf, bid: write(transform(bdf), bid)  # noqa: E731
+        handler = write
     writer = (
         df.writeStream.queryName(name)
         .outputMode(mode)
@@ -294,7 +290,9 @@ def start_pipeline(
     source_format: str = "files",
 ) -> PipelineHandles:
     """Start the selected streaming queries; each has its own checkpoint
-    under ``work_dir`` and its own MERGE sink table.
+    under ``work_dir`` and its own MERGE sink table, except a fold member
+    (``FOLDS``), which starts its host and writes its sink from the
+    host's micro-batch under the host's checkpoint.
 
     ``source_format``: ``"files"`` (the parquet file stream source) or
     ``"py_datasource"`` (the registered Spark 4 Python Data Source,
@@ -334,6 +332,95 @@ def start_pipeline(
     )
 
 
+def _member_sink(name: str, table_dir: str) -> tuple:
+    """Fold member ``name``'s sink, and the transform that maps its
+    host's micro-batch to the sink's rows.
+
+    The sketch and histogram members exclude the flush sentinel at
+    WRITE time: an additive sink cannot un-count (nor a max sketch
+    un-register) what a flush row contributed, and the read view cannot
+    filter rows that no longer carry conv_id.
+
+    Late-duplicate contract of the additive members (MG, CMS,
+    histogram): they ride the deduped stream, but
+    dropDuplicatesWithinWatermark only dedups within its watermark — a
+    duplicate arriving after its dedup state evicted passes through as
+    a late singleton (pinned in test_late_data.py). The keyed silver
+    sink absorbs it (latest-wins); an additive sink cannot un-count, so
+    its merged totals drift ABOVE truth by exactly the beyond-watermark
+    duplicate volume. That is the documented algebraic residual of
+    sum-merge sketches (test_streaming_e2e.py), not fixed here: the
+    write-side cure (anti-join each batch against silver's committed
+    keys) costs a sink read per batch; size the watermark to the
+    source's real lateness instead, which bounds the residual to zero."""
+    from pyspark.sql import functions as F
+
+    from ..datagen.flush import FLUSH_CONV_ID
+    from . import sinks
+
+    def real(bdf: DataFrame) -> DataFrame:
+        return bdf.filter(F.col("conv_id") != FLUSH_CONV_ID)
+
+    if name == "heavy_hitters":
+        from ..operators.heavy_hitters import STREAM_EXACT_K, mg_batch_summary
+
+        # one Misra-Gries summary delta per micro-batch, merged pointwise
+        # by the additive sink's read view
+        return (
+            sinks.AdditiveSummarySink(table_dir),
+            lambda bdf: mg_batch_summary(real(bdf), k=STREAM_EXACT_K),
+        )
+    if name == "countmin":
+        from ..operators.countmin import STREAM_EXACT_WIDTH, token_cms
+
+        return (
+            sinks.CountMinSink(table_dir, width=STREAM_EXACT_WIDTH),
+            lambda bdf: token_cms(real(bdf), text_col="text", width=STREAM_EXACT_WIDTH),
+        )
+    if name == "hll":
+        from ..operators.hll import STREAM_HLL_P, hll_build
+
+        # distinct-conversation cardinality over the unbounded stream
+        return (
+            sinks.HllSink(table_dir, p=STREAM_HLL_P),
+            lambda bdf: hll_build(real(bdf), "conv_id", p=STREAM_HLL_P),
+        )
+    if name == "hll_hour":
+        from ..operators.hll import STREAM_HLL_P, hll_windowed_build
+
+        # distinct conversations PER HOUR WINDOW — late data folds into
+        # its window's registers idempotently, so no watermark is needed
+        # for correctness (state grows with time, not cardinality)
+        return (
+            sinks.WindowedHllSink(table_dir, p=STREAM_HLL_P),
+            lambda bdf: hll_windowed_build(
+                real(bdf), "conv_id", "ts", "1 hour", p=STREAM_HLL_P
+            ),
+        )
+    if name == "gold_hour_rank":
+        from ..plans.gold_windows import rank_window_stats
+
+        # W10 streaming form: append-mode hour windows close fully within
+        # one micro-batch, so a batch-local dense_rank per window_start IS
+        # the global per-window rank (see rank_window_stats docstring)
+        return (
+            ParquetMergeSink(table_dir, ["window_start", "conv_id"], None),
+            rank_window_stats,
+        )
+    if name == "latency_hist":
+        from ..operators.histogram import LAT_HIST_BIN_US, pair_latency_bins
+
+        # the pairs stream already carries (user_ts, response_ts) per
+        # emitted pair, so the histogram rides it as one more additive
+        # delta per micro-batch (≤ n_bins rows of state). The sentinel
+        # cannot form a pair, but the join shape need not stay pair-proof.
+        return (
+            sinks.HistogramSink(table_dir, bin_width=LAT_HIST_BIN_US),
+            lambda bdf: pair_latency_bins(real(bdf), bin_width_us=LAT_HIST_BIN_US),
+        )
+    raise ValueError(f"{name} is not a fold member")
+
+
 def _start_queries(
     spark: SparkSession,
     source_dir: str,
@@ -348,17 +435,16 @@ def _start_queries(
     """``start_pipeline`` past its trigger guards: ``available_now``
     applies to the queries reading bronze only."""
     # fail loudly on a name no branch below will start: a typo'd query
-    # would otherwise be silently skipped (and even persisted into the
-    # wiring sidecar) while the caller believes its table is produced
-    known = GOLD_LAYER | {
-        "silver", "features", "role_runs", "tool_asof",
-        "heavy_hitters", "countmin", "hll", "hll_hour",
-    }
+    # would otherwise be silently skipped while the caller believes its
+    # table is produced
+    known = {*GOLD_LAYER, *FOLDS, "silver", "features", "role_runs", "tool_asof"}
     unknown = [q for q in queries if q not in known]
     if unknown:
         raise ValueError(
             f"unknown streaming queries {unknown}; known: {sorted(known)}"
         )
+    hosts = {FOLDS[q] for q in queries if q in FOLDS} - set(queries)
+    queries = (*sorted(hosts), *queries)
     if set(queries) & GOLD_LAYER and "silver" not in queries:
         queries = ("silver", *queries)
     h = PipelineHandles()
@@ -415,198 +501,39 @@ def _start_queries(
             .withWatermark("ts", watermark)
         )
 
-    # ---- multi-sink folds (same upstream plan → one query, N sinks) ----
-    # heavy_hitters' MG summary is a stateless per-batch transform over
-    # the SAME deduped silver stream the silver query computes, and
-    # gold_hour_rank is a batch-local rank over the SAME hour aggregate
-    # gold_hour computes. When both members of a fold are requested, run
-    # ONE streaming query per fold: the shared upstream's state stores
-    # (dedup / windowed agg) commit once per batch instead of once per
-    # sink — at verification scale those per-partition per-operator
-    # commits dominate the drain (r3 verdict item 6).
-    fold_hh = "silver" in queries and "heavy_hitters" in queries
-    fold_cms = "silver" in queries and "countmin" in queries
-    fold_hll = "silver" in queries and "hll" in queries
-    fold_hll_hour = "silver" in queries and "hll_hour" in queries
-    fold_rank = "gold_hour" in queries and "gold_hour_rank" in queries
-    fold_lat = "pairs" in queries and "latency_hist" in queries
-
-    # Batch-id provenance guard: a sink's commit log keys on bare batch
-    # ids, which are only meaningful relative to the ONE checkpoint that
-    # issued them. Restarting an existing work_dir with a different
-    # fold topology (folded <-> standalone) would feed a sink from a
-    # DIFFERENT checkpoint whose ids restart at 0 — is_committed would
-    # answer True from the stale log and micro-batches would be
-    # silently dropped (an additive sink then permanently undercounts).
-    # Record sink -> feeding-checkpoint wiring per work_dir and refuse
-    # a mismatch loudly.
-    wiring = {q: q for q in queries}
-    if fold_hh:
-        wiring["heavy_hitters"] = "silver"
-    if fold_cms:
-        wiring["countmin"] = "silver"
-    if fold_hll:
-        wiring["hll"] = "silver"
-    if fold_hll_hour:
-        wiring["hll_hour"] = "silver"
-    if fold_rank:
-        wiring["gold_hour_rank"] = "gold_hour"
-    if fold_lat:
-        wiring["latency_hist"] = "pairs"
-    wiring_path = os.path.join(work_dir, "_sink_wiring.json")
-    prior: dict[str, str] = {}
-    if os.path.exists(wiring_path):
-        with open(wiring_path) as f:
-            prior = json.load(f)
-    # legacy work_dirs (created before the wiring file existed): a
-    # checkpoint directory NAMED after a sink is hard evidence that sink
-    # previously ran standalone from its own checkpoint — infer that
-    # wiring so re-keying it (e.g. activating a fold on an old work_dir)
-    # is refused instead of silently skipping its stale batch ids
-    for s in wiring:
-        if s not in prior and os.path.isdir(
-            os.path.join(work_dir, "checkpoints", s)
-        ):
-            prior[s] = s
-    conflicts = {
-        s: (prior[s], c) for s, c in wiring.items()
-        if s in prior and prior[s] != c
-    }
-    if conflicts:
+    # Work dirs made while fold members could also run standalone: a
+    # checkpoint dir NAMED after a member is hard evidence its sink was
+    # fed from that checkpoint's batch ids, which the host's ids (from
+    # 0 again) would collide with — is_committed would answer True from
+    # the stale log and batches would be silently dropped.
+    legacy = [m for m in FOLDS if m in queries and os.path.isdir(ckpt(m))]
+    if legacy:
         raise RuntimeError(
-            "sink/checkpoint wiring changed for this work_dir — batch ids "
-            "from a different checkpoint would misalign the sinks' commit "
-            f"logs (silent data loss): {conflicts}. Use a fresh work_dir, "
-            "or restart with the same query topology."
+            f"fold members {legacy} ran standalone in this work_dir "
+            f"({', '.join(ckpt(m) for m in legacy)}); they now ride their "
+            "host query, whose batch ids would misalign the sinks' commit "
+            "logs (silent data loss). Use a fresh work_dir."
         )
 
-    def _commit_wiring() -> None:
-        # called AFTER every query started (so a refused topology — this
-        # guard or _check_sink_alignment — leaves the file untouched and
-        # cannot poison later legitimate runs); tmp + rename like every
-        # other commit-point file: a crash mid-write must not brick an
-        # otherwise-resumable work_dir
-        os.makedirs(work_dir, exist_ok=True)
-        with open(wiring_path + ".tmp", "w") as f:
-            json.dump({**prior, **wiring}, f, indent=2)
-        os.rename(wiring_path + ".tmp", wiring_path)
-
-    # ---- additive-fold late-duplicate contract (r5 review) -----------
-    # The MG/CMS/histogram folds ride the deduped stream, but
-    # dropDuplicatesWithinWatermark only dedups within its watermark: a
-    # duplicate arriving after its dedup state evicted passes through
-    # as a late singleton (pinned in test_late_data.py). The keyed
-    # MERGE silver sink absorbs it (latest-wins), but an additive sink
-    # cannot un-count — its merged totals drift ABOVE truth by exactly
-    # the beyond-watermark duplicate volume. This is the documented
-    # algebraic residual of sum-merge sketches (test_streaming_e2e.py),
-    # not silently "fixed" here: the write-side cure (anti-join each
-    # batch against the silver sink's committed keys) costs a sink read
-    # per batch and belongs to deployments whose sources actually
-    # replay beyond the watermark — size the watermark to the source's
-    # real lateness instead, which bounds the residual to zero.
-
-    def _mg_transform():
-        from pyspark.sql import functions as F
-
-        from ..datagen.flush import FLUSH_CONV_ID
-        from ..operators.heavy_hitters import STREAM_EXACT_K, mg_batch_summary
-
-        return lambda bdf: mg_batch_summary(
-            bdf.filter(F.col("conv_id") != FLUSH_CONV_ID), k=STREAM_EXACT_K
-        )
-
-    def _cms_transform():
-        from pyspark.sql import functions as F
-
-        from ..datagen.flush import FLUSH_CONV_ID
-        from ..operators.countmin import STREAM_EXACT_WIDTH, token_cms
-
-        # flush/sentinel rows must be excluded at WRITE time, exactly as
-        # for the MG summaries — an additive sink cannot un-count them
-        return lambda bdf: token_cms(
-            bdf.filter(F.col("conv_id") != FLUSH_CONV_ID),
-            text_col="text",
-            width=STREAM_EXACT_WIDTH,
-        )
-
-    def _hll_transform():
-        from pyspark.sql import functions as F
-
-        from ..datagen.flush import FLUSH_CONV_ID
-        from ..operators.hll import STREAM_HLL_P, hll_build
-
-        # distinct-conversation cardinality over the unbounded stream;
-        # flush sentinels excluded at write (max can't un-register a
-        # bucket any more than a sum can un-count)
-        return lambda bdf: hll_build(
-            bdf.filter(F.col("conv_id") != FLUSH_CONV_ID), "conv_id", p=STREAM_HLL_P
-        )
-
-    def _hll_hour_transform():
-        from pyspark.sql import functions as F
-
-        from ..datagen.flush import FLUSH_CONV_ID
-        from ..operators.hll import STREAM_HLL_P, hll_windowed_build
-
-        # distinct conversations PER HOUR WINDOW — late data folds into
-        # its window's registers idempotently, so no watermark is needed
-        # for correctness (state grows with time, not cardinality)
-        return lambda bdf: hll_windowed_build(
-            bdf.filter(F.col("conv_id") != FLUSH_CONV_ID),
-            "conv_id",
-            "ts",
-            "1 hour",
-            p=STREAM_HLL_P,
-        )
+    def member_sinks(host: str):
+        """The (sink, transform) of each requested fold member of ``host``."""
+        extra = []
+        for m in FOLDS:
+            if FOLDS[m] == host and m in queries:
+                h.sinks[m], transform = _member_sink(m, table(m))
+                extra.append((h.sinks[m], transform))
+        return extra or None
 
     if "silver" in queries:
-        from .sinks import AdditiveSummarySink
-
         sink = ParquetMergeSink(table("silver"), ["conv_id", "turn_idx"], "ts")
         h.sinks["silver"] = sink
-        extra = []
-        if fold_hh:
-            hh_sink = AdditiveSummarySink(table("heavy_hitters"))
-            h.sinks["heavy_hitters"] = hh_sink
-            extra.append((hh_sink, _mg_transform()))
-        if fold_cms:
-            from ..operators.countmin import STREAM_EXACT_WIDTH
-            from .sinks import CountMinSink
-
-            cms_sink = CountMinSink(table("countmin"), width=STREAM_EXACT_WIDTH)
-            h.sinks["countmin"] = cms_sink
-            extra.append((cms_sink, _cms_transform()))
-        if fold_hll:
-            from ..operators.hll import STREAM_HLL_P
-            from .sinks import HllSink
-
-            hll_sink = HllSink(table("hll"), p=STREAM_HLL_P)
-            h.sinks["hll"] = hll_sink
-            extra.append((hll_sink, _hll_transform()))
-        if fold_hll_hour:
-            from ..operators.hll import STREAM_HLL_P
-            from .sinks import WindowedHllSink
-
-            whll_sink = WindowedHllSink(table("hll_hour"), p=STREAM_HLL_P)
-            h.sinks["hll_hour"] = whll_sink
-            extra.append((whll_sink, _hll_hour_transform()))
         silver_df = silver_stream(src(), watermark)
         silver_schema = silver_df.schema
-        q = _start(
+        h.queries["silver"] = _start(
             silver_df, sink, "silver", ckpt("silver"),
             "append", available_now, trigger_interval,
-            extra_sinks=extra or None, lineage=True,
+            extra_sinks=member_sinks("silver"), lineage=True,
         )
-        h.queries["silver"] = q
-        if fold_hh:
-            h.queries["heavy_hitters"] = q  # same query object (alias)
-        if fold_cms:
-            h.queries["countmin"] = q
-        if fold_hll:
-            h.queries["hll"] = q
-        if fold_hll_hour:
-            h.queries["hll_hour"] = q
 
     if "features" in queries:
         from ..functions.cleansing import cleanse_turns
@@ -646,64 +573,6 @@ def _start_queries(
             trigger_interval,
         )
 
-    if "heavy_hitters" in queries and not fold_hh:
-        from .sinks import AdditiveSummarySink
-
-        # streaming sketch maintenance: one Misra-Gries summary delta per
-        # micro-batch over the DEDUPED turn stream, merged pointwise by
-        # the additive sink's read view. Control/sentinel rows must be
-        # excluded at WRITE time — an additive sink cannot un-count at
-        # read time what a flush row contributed at write time (the
-        # filter lives in _mg_transform, shared with the folded form).
-        sink = AdditiveSummarySink(table("heavy_hitters"))
-        h.sinks["heavy_hitters"] = sink
-        h.queries["heavy_hitters"] = _start(
-            silver_stream(src(), watermark),
-            sink, "heavy_hitters", ckpt("heavy_hitters"), "append",
-            available_now, trigger_interval, transform=_mg_transform(),
-        )
-
-    if "countmin" in queries and not fold_cms:
-        from ..operators.countmin import STREAM_EXACT_WIDTH
-        from .sinks import CountMinSink
-
-        # standalone form of the CMS maintenance query — same transform
-        # (and the same write-time flush exclusion) as the folded one
-        sink = CountMinSink(table("countmin"), width=STREAM_EXACT_WIDTH)
-        h.sinks["countmin"] = sink
-        h.queries["countmin"] = _start(
-            silver_stream(src(), watermark),
-            sink, "countmin", ckpt("countmin"), "append",
-            available_now, trigger_interval, transform=_cms_transform(),
-        )
-
-    if "hll" in queries and not fold_hll:
-        from ..operators.hll import STREAM_HLL_P
-        from .sinks import HllSink
-
-        # standalone form of the HLL maintenance query — same transform
-        # (and the same write-time flush exclusion) as the folded one
-        sink = HllSink(table("hll"), p=STREAM_HLL_P)
-        h.sinks["hll"] = sink
-        h.queries["hll"] = _start(
-            silver_stream(src(), watermark),
-            sink, "hll", ckpt("hll"), "append",
-            available_now, trigger_interval, transform=_hll_transform(),
-        )
-
-    if "hll_hour" in queries and not fold_hll_hour:
-        from ..operators.hll import STREAM_HLL_P
-        from .sinks import WindowedHllSink
-
-        # standalone form of the windowed-HLL maintenance query
-        sink = WindowedHllSink(table("hll_hour"), p=STREAM_HLL_P)
-        h.sinks["hll_hour"] = sink
-        h.queries["hll_hour"] = _start(
-            silver_stream(src(), watermark),
-            sink, "hll_hour", ckpt("hll_hour"), "append",
-            available_now, trigger_interval, transform=_hll_hour_transform(),
-        )
-
     # ---- gold layer: silver's committed deltas, one per trigger -------
     # No no-data batches of gold's own: gold then evicts only on silver
     # commits (silver's empty commits included), so its watermark and
@@ -711,8 +580,11 @@ def _start_queries(
     # run an eviction batch while silver is still writing the batch
     # holding late rows, and drop rows the chain absorbs today.
     # Default trigger: silver's commits set gold's pace (start_pipeline).
-    def start_gold(df, sink, name, **kw) -> StreamingQuery:
-        return _start(df, sink, name, ckpt(name), "append", False, None, **kw)
+    def start_gold(df, sink, name) -> StreamingQuery:
+        return _start(
+            df, sink, name, ckpt(name), "append", False, None,
+            extra_sinks=member_sinks(name),
+        )
 
     prev_no_data = spark.conf.get(_NO_DATA_BATCHES)
     spark.conf.set(_NO_DATA_BATCHES, "false")
@@ -720,36 +592,8 @@ def _start_queries(
         if "gold_hour" in queries:
             sink = ParquetMergeSink(table("gold_hour"), ["window_start", "conv_id"], "window_start")
             h.sinks["gold_hour"] = sink
-            extra = None
-            if fold_rank:
-                from ..plans.gold_windows import rank_window_stats
-
-                rank_sink = ParquetMergeSink(
-                    table("gold_hour_rank"), ["window_start", "conv_id"], None
-                )
-                h.sinks["gold_hour_rank"] = rank_sink
-                extra = [(rank_sink, rank_window_stats)]
-            q = start_gold(
-                conv_window_stats_stream(silver_src(), "hour"),
-                sink, "gold_hour", extra_sinks=extra,
-            )
-            h.queries["gold_hour"] = q
-            if fold_rank:
-                h.queries["gold_hour_rank"] = q
-
-        if "gold_hour_rank" in queries and not fold_rank:
-            from ..plans.gold_windows import rank_window_stats
-
-            # W10 streaming form: append-mode hour windows close fully within
-            # one micro-batch, so a batch-local dense_rank per window_start IS
-            # the global per-window rank (see rank_window_stats docstring)
-            sink = ParquetMergeSink(
-                table("gold_hour_rank"), ["window_start", "conv_id"], None
-            )
-            h.sinks["gold_hour_rank"] = sink
-            h.queries["gold_hour_rank"] = start_gold(
-                conv_window_stats_stream(silver_src(), "hour"),
-                sink, "gold_hour_rank", transform=rank_window_stats,
+            h.queries["gold_hour"] = start_gold(
+                conv_window_stats_stream(silver_src(), "hour"), sink, "gold_hour"
             )
 
         if "gold_day" in queries:
@@ -817,54 +661,11 @@ def _start_queries(
                 sink, "enriched_hour",
             )
 
-        def _lat_hist_transform():
-            from pyspark.sql import functions as F
-
-            from ..datagen.flush import FLUSH_CONV_ID
-            from ..operators.histogram import LAT_HIST_BIN_US, pair_latency_bins
-
-            # the flush sentinel cannot form a pair (its conv has no second
-            # turn), but exclude it anyway — the additive sink can't
-            # un-count a row, and conventions shouldn't rely on the join
-            # shape staying pair-proof
-            return lambda bdf: pair_latency_bins(
-                bdf.filter(F.col("conv_id") != FLUSH_CONV_ID),
-                bin_width_us=LAT_HIST_BIN_US,
-            )
-
         if "pairs" in queries:
             sink = ParquetMergeSink(table("pairs"), ["conv_id", "user_turn_idx"], None)
             h.sinks["pairs"] = sink
-            extra = None
-            if fold_lat:
-                from ..operators.histogram import LAT_HIST_BIN_US
-                from .sinks import HistogramSink
-
-                # global inter-turn latency percentile maintenance: the
-                # pairs stream already carries (user_ts, response_ts) per
-                # emitted pair, so the histogram rides it as one more
-                # additive delta per micro-batch (≤ n_bins rows of state)
-                lat_sink = HistogramSink(table("latency_hist"), bin_width=LAT_HIST_BIN_US)
-                h.sinks["latency_hist"] = lat_sink
-                extra = [(lat_sink, _lat_hist_transform())]
-            q = start_gold(
-                user_response_pairs_stream(silver_src()),
-                sink, "pairs", extra_sinks=extra,
-            )
-            h.queries["pairs"] = q
-            if fold_lat:
-                h.queries["latency_hist"] = q
-
-        if "latency_hist" in queries and not fold_lat:
-            from ..operators.histogram import LAT_HIST_BIN_US
-            from .sinks import HistogramSink
-
-            # standalone form: its own pairs join feeding only the histogram
-            sink = HistogramSink(table("latency_hist"), bin_width=LAT_HIST_BIN_US)
-            h.sinks["latency_hist"] = sink
-            h.queries["latency_hist"] = start_gold(
-                user_response_pairs_stream(silver_src()),
-                sink, "latency_hist", transform=_lat_hist_transform(),
+            h.queries["pairs"] = start_gold(
+                user_response_pairs_stream(silver_src()), sink, "pairs"
             )
     except BaseException:
         h.stop_all()  # silver may have been started for the gold layer
@@ -873,9 +674,13 @@ def _start_queries(
         spark.conf.set(_NO_DATA_BATCHES, prev_no_data)
     # every gold checkpoint the work dir has: compact_all must not fold
     # a silver delta that one of them has not read, started now or not
-    h.silver_readers = {q: ckpt(q) for q in GOLD_LAYER if os.path.isdir(ckpt(q))}
-
-    _commit_wiring()
+    # (a fold member's own checkpoint is a legacy one that never runs again)
+    h.silver_readers = {
+        q: ckpt(q) for q in GOLD_LAYER - FOLDS.keys() if os.path.isdir(ckpt(q))
+    }
+    for m in FOLDS:
+        if m in queries:
+            h.queries[m] = h.queries[FOLDS[m]]  # same query object (alias)
     return h
 
 
@@ -946,3 +751,58 @@ def run_pipeline_to_completion(
         if shuffle_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
     return h
+
+
+def drain_file_stream(
+    spark: SparkSession,
+    source_dir: str,
+    work_dir: str,
+    name: str,
+    keys: list[str],
+    plan,
+    mode: str,
+    max_files_per_trigger: int = 1,
+    shuffle_partitions: int | None = None,
+    handler=ParquetMergeSink.foreach_batch_handler,
+) -> ParquetMergeSink:
+    """Drain a parquet file stream through ``plan`` (stream DataFrame →
+    stream DataFrame) into the MERGE sink ``tables/<name>`` keyed by
+    ``keys``, checkpointed under ``checkpoints/<name>``, with
+    ``Trigger.AvailableNow``; returns the sink. The one drain of the
+    side runners (stateful LSH and embedding dedup, funnel, SCD2).
+
+    The schema comes from the source files themselves: a hardcoded
+    literal would silently NULL-fill renamed or retyped columns, where
+    deriving it makes drift fail loudly at analysis time. Resuming
+    follows the engine's contract: a checkpoint whose committed batches
+    are missing from the sink is refused (``_check_sink_alignment``).
+
+    ``handler(sink)`` returns the ``foreachBatch`` function; the default
+    writes each batch with ``sink.process_batch``. ``shuffle_partitions``: as in
+    ``run_pipeline_to_completion``; restored however the drain ends, a
+    refused resume or a bad source path included."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    if shuffle_partitions is not None:
+        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    try:
+        schema = spark.read.parquet(source_dir).schema
+        src = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", max_files_per_trigger)
+            .parquet(source_dir)
+        )
+        sink = ParquetMergeSink(os.path.join(work_dir, "tables", name), keys, None)
+        ckpt = os.path.join(work_dir, "checkpoints", name)
+        _check_sink_alignment(ckpt, name, sink, None)
+        (
+            plan(src).writeStream.queryName(name)
+            .outputMode(mode)
+            .option("checkpointLocation", ckpt)
+            .foreachBatch(handler(sink))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return sink

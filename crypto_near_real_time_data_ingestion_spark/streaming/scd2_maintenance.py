@@ -24,8 +24,6 @@ for free from the MERGE sink's versioned deltas.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.scd2 import TIER_WIDTH, _tiered, scd2_history, scd2_rebuild_touched
@@ -43,47 +41,24 @@ def run_scd2_maintenance_to_completion(
     maintenance; returns the MERGE sink holding the dimension. Same
     resume-safety + verification-scale partition rationale as the other
     stateful runners."""
-    from .engine import _check_sink_alignment
-    from .sinks import ParquetMergeSink
+    from .engine import drain_file_stream
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    schema = spark.read.parquet(source_dir).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
+    def handler(sink):
+        def handle(batch_df: DataFrame, batch_id: int) -> None:
+            updates = _tiered(batch_df, tier_width)
+            try:
+                current = sink.read(spark)
+            except FileNotFoundError:
+                # first batch: nothing stored — the rebuild IS the history
+                rebuilt = scd2_history(updates)
+            else:
+                rebuilt = scd2_rebuild_touched(current, updates)
+            sink.process_batch(rebuilt, batch_id)
+
+        return handle
+
+    return drain_file_stream(
+        spark, source_dir, work_dir, "scd2_dim",
+        ["user_id", "event_type", "version"], lambda src: src, "update",
+        max_files_per_trigger, shuffle_partitions, handler,
     )
-    sink = ParquetMergeSink(
-        os.path.join(work_dir, "tables", "scd2_dim"),
-        ["user_id", "event_type", "version"],
-        None,
-    )
-    ckpt = os.path.join(work_dir, "checkpoints", "scd2_dim")
-    _check_sink_alignment(ckpt, "scd2_dim", sink, None)
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        updates = _tiered(batch_df, tier_width)
-        try:
-            current = sink.read(spark)
-        except FileNotFoundError:
-            # first batch: nothing stored — the rebuild IS the history
-            rebuilt = scd2_history(updates)
-        else:
-            rebuilt = scd2_rebuild_touched(current, updates)
-        sink.process_batch(rebuilt, batch_id)
-
-    try:
-        q = (
-            src.writeStream.queryName("scd2_dim")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(handle)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return sink

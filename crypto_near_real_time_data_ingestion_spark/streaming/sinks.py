@@ -631,10 +631,10 @@ def _bind_sketch_params(
     table_dir: str, filename: str, params: dict, what: str
 ) -> None:
     """Persist a sketch sink's parameters in a sidecar on first open and
-    refuse mismatched reopens (the ``_sink_wiring.json`` guard pattern):
-    sketches only merge/query correctly under the parameters they were
-    built with, and a SEED mismatch is structurally invisible — mixing
-    deltas from two configs silently breaks the sketch's guarantee."""
+    refuse mismatched reopens: sketches only merge/query correctly under
+    the parameters they were built with, and a SEED mismatch is
+    structurally invisible — mixing deltas from two configs silently
+    breaks the sketch's guarantee."""
     path = os.path.join(table_dir, filename)
     if os.path.exists(path):
         with open(path) as f:
@@ -664,11 +664,10 @@ class CountMinSink(ParquetMergeSink):
     vocabulary), which is what you keep per shard at 10^13 tokens.
 
     The sink PERSISTS its (width, depth, seed) in a sidecar and refuses
-    to reopen with different ones (the ``_sink_wiring.json`` guard
-    pattern): sketches only merge/query correctly under the parameters
-    they were built with, and a seed mismatch is structurally invisible
-    — mixing deltas from two configs would silently break the
-    never-underestimate guarantee. Query through ``estimates()`` to get
+    to reopen with different ones: sketches only merge/query correctly
+    under the parameters they were built with, and a seed mismatch is
+    structurally invisible — mixing deltas from two configs would
+    silently break the never-underestimate guarantee. Query through ``estimates()`` to get
     the recorded binding for free."""
 
     def __init__(

@@ -219,44 +219,12 @@ def run_emb_dedup_to_completion(
     (the corpus slices) rolls back with a crashed batch, and a
     checkpoint whose engine-committed batches are missing from the sink
     is refused (those batches would never be replayed)."""
-    import os
-
-    from .engine import _check_sink_alignment
-    from .sinks import ParquetMergeSink
+    from .engine import drain_file_stream
 
     if n_shards is None:
         n_shards = max(8, min(64, spark.sparkContext.defaultParallelism))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-
-    # schema derived from the source files (same drift rationale as the
-    # LSH runner: a hardcoded literal would NULL-fill renames silently)
-    schema = spark.read.parquet(source_dir).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
+    return drain_file_stream(
+        spark, source_dir, work_dir, "emb_pairs", ["vec_id_1", "vec_id_2"],
+        lambda src: emb_near_dup_stream(src, threshold, n_shards, max_members),
+        "update", max_files_per_trigger, shuffle_partitions,
     )
-    sink = ParquetMergeSink(
-        os.path.join(work_dir, "tables", "emb_pairs"),
-        ["vec_id_1", "vec_id_2"],
-        None,
-    )
-    ckpt = os.path.join(work_dir, "checkpoints", "emb_pairs")
-    _check_sink_alignment(ckpt, "emb_pairs", sink, None)
-    try:
-        q = (
-            emb_near_dup_stream(src, threshold, n_shards, max_members)
-            .writeStream.queryName("emb_pairs")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink.foreach_batch_handler())
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return sink

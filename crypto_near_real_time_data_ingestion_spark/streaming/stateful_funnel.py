@@ -229,43 +229,18 @@ def run_funnel_to_completion(
     exactly-once MERGE sink keyed by the anchor's event_id; returns the
     sink. Same resume-safety + verification-scale partition rationale as
     ``stateful_lsh.run_lsh_dedup_to_completion``."""
-    import os
+    from .engine import drain_file_stream
 
-    from .engine import _check_sink_alignment
-    from .sinks import ParquetMergeSink
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    schema = spark.read.parquet(source_dir).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
+    def plan(src: DataFrame) -> DataFrame:
         # driver parquet carries TIMESTAMP_NTZ; watermarks require
         # TIMESTAMP — value-preserving here (session TZ pinned UTC)
-        .select(
+        events = src.select(
             "user_id", "event_id", "event_type",
             F.col("ts").cast("timestamp").alias("ts"),
-        )
-        .withWatermark("ts", watermark)
+        ).withWatermark("ts", watermark)
+        return funnel_stream(events, steps, horizon_s)
+
+    return drain_file_stream(
+        spark, source_dir, work_dir, "funnel", ["event_id"], plan, "append",
+        max_files_per_trigger, shuffle_partitions,
     )
-    sink = ParquetMergeSink(
-        os.path.join(work_dir, "tables", "funnel"), ["event_id"], None
-    )
-    ckpt = os.path.join(work_dir, "checkpoints", "funnel")
-    _check_sink_alignment(ckpt, "funnel", sink, None)
-    try:
-        q = (
-            funnel_stream(src, steps, horizon_s)
-            .writeStream.queryName("funnel")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .foreachBatch(sink.foreach_batch_handler())
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return sink

@@ -360,50 +360,10 @@ def run_lsh_dedup_to_completion(
     pass a small value for verification-scale drains (same rationale and
     measurement as ``engine.run_pipeline_to_completion``); production
     streams size it to bucket-state volume as usual. Restored after."""
-    import os
+    from .engine import drain_file_stream
 
-    from .engine import _check_sink_alignment
-    from .sinks import ParquetMergeSink
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-
-    # schema comes from the source files themselves: a hardcoded literal
-    # would silently NULL-fill renamed/retyped columns (doc_shingles then
-    # filters the NULL text and the drain "succeeds" with an empty pairs
-    # table) — deriving it makes drift fail loudly at analysis time
-    schema = spark.read.parquet(source_dir).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
+    return drain_file_stream(
+        spark, source_dir, work_dir, "lsh_pairs", ["doc_id_1", "doc_id_2"],
+        lambda src: lsh_pairs_stream(src, threshold, max_bucket_members, bucket_groups),
+        "update", max_files_per_trigger, shuffle_partitions,
     )
-    sink = ParquetMergeSink(
-        os.path.join(work_dir, "tables", "lsh_pairs"),
-        ["doc_id_1", "doc_id_2"],
-        None,
-    )
-    ckpt = os.path.join(work_dir, "checkpoints", "lsh_pairs")
-    # same resume-safety contract as the engine's queries: refuse to
-    # resume a checkpoint whose engine-committed batches are missing
-    # from the sink (e.g. the table dir was lost while the checkpoint
-    # survived) — those batches will never be replayed
-    _check_sink_alignment(ckpt, "lsh_pairs", sink, None)
-    try:
-        q = (
-            lsh_pairs_stream(src, threshold, max_bucket_members, bucket_groups)
-            .writeStream.queryName("lsh_pairs")
-            .outputMode("update")
-            .option(
-                "checkpointLocation", ckpt,
-            )
-            .foreachBatch(sink.foreach_batch_handler())
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return sink

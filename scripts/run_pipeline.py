@@ -42,7 +42,9 @@ def main() -> int:
     ap.add_argument("--source", required=True, help="transcripts stream directory")
     ap.add_argument("--work-dir", required=True, help="checkpoints + sink tables root")
     ap.add_argument("--queries", default="silver,gold_hour",
-                    help="comma list: silver,gold_hour,gold_day,sessions,pairs,features")
+                    help="comma list: silver,gold_hour,gold_day,sessions,pairs,features; "
+                    "a fold member (heavy_hitters, countmin, hll, hll_hour, "
+                    "gold_hour_rank, latency_hist) starts its host query")
     ap.add_argument("--watermark", default="15 minutes")
     ap.add_argument("--trigger", default=None, help="processing-time trigger, e.g. '1 minute'")
     ap.add_argument("--available-now", action="store_true", help="drain source and exit")

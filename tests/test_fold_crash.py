@@ -7,7 +7,8 @@ This test injects that crash for real — the fold's SECOND sink
 (heavy_hitters, the additive one that would double-count if a replay
 were not a no-op-per-sink) raises once mid-drain, strictly after the
 primary (silver) has committed the same batch id — then restarts the
-pipeline from its checkpoint and drains to completion.
+pipeline from its checkpoint and drains to completion. The member is
+requested alone: it starts its host, silver, and rides its query.
 
 Pass criteria:
   - at crash time the primary's commit marker for the batch exists
@@ -74,7 +75,7 @@ def test_fold_crash_between_sinks_is_exactly_once(
         with pytest.raises(Exception):
             run_pipeline_to_completion(
                 spark, fsrc, WORK,
-                queries=("silver", "heavy_hitters"),
+                queries=("heavy_hitters",),
                 max_files_per_trigger=2,
             )
     finally:
@@ -88,9 +89,11 @@ def test_fold_crash_between_sinks_is_exactly_once(
     # for that id) writes it now
     h = run_pipeline_to_completion(
         spark, fsrc, WORK,
-        queries=("silver", "heavy_hitters"),
+        queries=("heavy_hitters",),
         max_files_per_trigger=2,
     )
+    # the member alone starts its host and rides its query
+    assert h.queries["heavy_hitters"] is h.queries["silver"]
 
     want_silver = silver_batch(read_transcripts(spark, transcripts_parquet))
     got_silver = h.sinks["silver"].read(spark).filter(
@@ -172,96 +175,34 @@ def test_gold_crash_before_checkpoint_commit_replays(
     assert_df_equal(got, want.toPandas(), sort_cols=["conv_id", "window_start"])
 
 
-def test_topology_switch_on_existing_work_dir_refuses(spark):
-    """Restarting a work_dir with a different fold topology must be a
-    LOUD error, not silent data loss: a folded heavy_hitters sink holds
-    batch ids issued by the SILVER checkpoint; a standalone restart
-    would issue fresh ids from 0 that collide with the stale commit log
-    (is_committed → True → batches silently dropped)."""
-    import json
-
-    from crypto_near_real_time_data_ingestion_spark.streaming.engine import (
-        start_pipeline,
-    )
-
-    work = WORK + "_wiring"
-    shutil.rmtree(work, ignore_errors=True)
-    os.makedirs(work)
-    # a prior FOLDED run recorded heavy_hitters as fed by silver's ckpt
-    with open(os.path.join(work, "_sink_wiring.json"), "w") as f:
-        json.dump({"silver": "silver", "heavy_hitters": "silver"}, f)
-    # the guard fires before any query (or even the source) is touched
-    with pytest.raises(RuntimeError, match="wiring changed"):
-        start_pipeline(
-            spark, os.path.join(work, "missing-source"), work,
-            queries=("heavy_hitters",), available_now=True,
-        )
-    # same-topology restart stays allowed: no exception from the guard
-    # itself (we don't start the queries — just re-check the wiring)
-    with open(os.path.join(work, "_sink_wiring.json")) as f:
-        assert json.load(f)["heavy_hitters"] == "silver"
-
-
-def test_refused_topology_does_not_poison_work_dir(spark, stream_parquet_dir):
-    """A refused fold attempt must leave the wiring file untouched: the
-    wiring is committed only after every query starts, so the failed
-    attempt cannot make a later LEGITIMATE topology (standalone
-    heavy_hitters with its own fresh checkpoint) spuriously refused."""
-    import json
-
-    from crypto_near_real_time_data_ingestion_spark.streaming.engine import (
-        run_pipeline_to_completion,
-    )
-
-    work = WORK + "_poison"
-    shutil.rmtree(work, ignore_errors=True)
-    fsrc = build_flushed_source(stream_parquet_dir, os.path.join(work, "source"))
-    run_pipeline_to_completion(
-        spark, fsrc, work, queries=("silver",), max_files_per_trigger=2
-    )
-    with pytest.raises(RuntimeError, match="never be replayed"):
-        run_pipeline_to_completion(
-            spark, fsrc, work,
-            queries=("silver", "heavy_hitters"), max_files_per_trigger=2,
-        )
-    with open(os.path.join(work, "_sink_wiring.json")) as f:
-        assert "heavy_hitters" not in json.load(f), "refused wiring persisted"
-    # standalone heavy_hitters (fresh own checkpoint, full re-drain) is
-    # safe and must still be allowed
-    h = run_pipeline_to_completion(
-        spark, fsrc, work, queries=("heavy_hitters",), max_files_per_trigger=2
-    )
-    assert h.sinks["heavy_hitters"].read(spark).count() > 0
-
-
-def test_legacy_work_dir_infers_standalone_wiring(spark, stream_parquet_dir):
-    """Pre-wiring-file work_dirs: a checkpoint dir NAMED after a sink is
-    proof it ran standalone, so activating a fold on such a work_dir
-    must be refused even with no _sink_wiring.json present."""
+def test_legacy_work_dir_infers_standalone_wiring(spark):
+    """Work dirs from when fold members could run standalone: a
+    checkpoint dir NAMED after a member is proof its sink holds that
+    checkpoint's batch ids, so starting the member on its host's
+    checkpoint must be refused before any query starts."""
     from crypto_near_real_time_data_ingestion_spark.streaming.engine import (
         run_pipeline_to_completion,
     )
 
     work = WORK + "_legacy"
     shutil.rmtree(work, ignore_errors=True)
-    fsrc = build_flushed_source(stream_parquet_dir, os.path.join(work, "source"))
-    run_pipeline_to_completion(
-        spark, fsrc, work, queries=("heavy_hitters",), max_files_per_trigger=2
-    )
-    os.remove(os.path.join(work, "_sink_wiring.json"))  # simulate legacy
-    with pytest.raises(RuntimeError, match="wiring changed"):
+    # what a standalone heavy_hitters run left behind
+    os.makedirs(os.path.join(work, "checkpoints", "heavy_hitters", "commits"))
+    with pytest.raises(RuntimeError, match="ran standalone"):
         run_pipeline_to_completion(
-            spark, fsrc, work,
+            spark, os.path.join(work, "missing-source"), work,
             queries=("silver", "heavy_hitters"), max_files_per_trigger=2,
         )
+    assert not os.path.exists(os.path.join(work, "checkpoints", "silver"))
 
 
 def test_attach_sink_to_advanced_checkpoint_refuses(spark, stream_parquet_dir):
-    """The wiring file can't catch a sink NEWLY attached to a checkpoint
-    that advanced while the sink was absent (the mapping is new, not
-    changed) — the batch-alignment guard must: every batch in the
-    checkpoint's commits log is gone forever (never replayed), so a
-    fold member joining late would silently miss all of them."""
+    """The standalone-member guard can't catch a sink NEWLY attached to
+    a checkpoint that advanced while the sink was absent (the member
+    never had a checkpoint of its own) — the batch-alignment guard
+    must: every batch in the checkpoint's commits log is gone forever
+    (never replayed), so a fold member joining late would silently miss
+    all of them."""
     from crypto_near_real_time_data_ingestion_spark.streaming.engine import (
         run_pipeline_to_completion,
     )

@@ -175,3 +175,27 @@ def test_equal_ts_rows_never_split_across_chunks(spark, tmp_path):
     got = sink.read(spark).drop("__batch_id")
     want = scd2.events_scd2(spark.read.parquet(src_parquet)).toPandas()
     assert_df_equal(got, want, sort_cols=["user_id", "event_type", "version"])
+
+
+def test_refused_resume_restores_shuffle_partitions(spark):
+    """A resume refused because the sink lost committed batches (its
+    table dir was deleted after a drain) must leave the session's
+    shuffle-partition count as it found it."""
+    src = build_events_stream_source(
+        f"{SF_DIR}/events.parquet", os.path.join(WORK, "src_refused"), 2,
+        sentinel=False,
+    )
+    work = os.path.join(WORK, "run_refused")
+    shutil.rmtree(work, ignore_errors=True)
+    run_scd2_maintenance_to_completion(spark, src, work, shuffle_partitions=4)
+    shutil.rmtree(os.path.join(work, "tables", "scd2_dim"))
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        with pytest.raises(RuntimeError, match="never be replayed"):
+            run_scd2_maintenance_to_completion(
+                spark, src, work, shuffle_partitions=3
+            )
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
