@@ -32,6 +32,8 @@ Queries reading bronze (each scans the source itself):
               definitive closure (role change / eviction flush) → MERGE
   tool_asof   streaming as-of join: latest tool call ≤ each turn's ts
               (keyed state, watermark-ordered matching) → MERGE
+  (``KEYED_STATE``: these three are kernels of one keyed-state driver,
+  ``stateful.py``)
   heavy_hitters  streaming sketch maintenance: per-batch Misra-Gries
               token summaries → additive sink (pointwise merge; the
               commit log makes the non-idempotent merge exactly-once)
@@ -81,12 +83,16 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from ..functions.cleansing import cleanse_turns
 from ..operators.joins import user_response_pairs_stream
 from ..operators.sessionize import sessionize_stream
 from ..plans.gold_windows import conv_window_stats_stream
 from ..plans.silver import silver_stream
 from ..sources import read_transcripts_stream
 from .sinks import ParquetMergeSink
+from .stateful import conv_features_stream
+from .stateful_asof import tool_asof_stream
+from .stateful_runs import role_runs_stream
 
 DEFAULT_WATERMARK = "15 minutes"
 
@@ -102,6 +108,13 @@ GOLD_LAYER = frozenset({
 FOLDS = {
     "heavy_hitters": "silver", "countmin": "silver", "hll": "silver",
     "hll_hour": "silver", "gold_hour_rank": "gold_hour", "latency_hist": "pairs",
+}
+# the keyed-state queries over cleansed bronze (``stateful.py``'s one
+# driver, one kernel each): name → (sink keys, plan)
+KEYED_STATE = {
+    "features": (["conv_id", "turn_idx"], conv_features_stream),
+    "role_runs": (["conv_id", "run_start_turn"], role_runs_stream),
+    "tool_asof": (["conv_id", "turn_idx"], tool_asof_stream),
 }
 _NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
 
@@ -285,50 +298,32 @@ def start_pipeline(
     queries: tuple[str, ...] = ("silver", "gold_hour", "pairs"),
     watermark: str = DEFAULT_WATERMARK,
     max_files_per_trigger: int = 1,
-    available_now: bool = False,
     trigger_interval: str | None = None,
     source_format: str = "files",
 ) -> PipelineHandles:
     """Start the selected streaming queries; each has its own checkpoint
     under ``work_dir`` and its own MERGE sink table, except a fold member
     (``FOLDS``), which starts its host and writes its sink from the
-    host's micro-batch under the host's checkpoint.
+    host's micro-batch under the host's checkpoint. The queries run
+    until stopped; ``run_pipeline_to_completion`` drains a bounded
+    source instead.
 
     ``source_format``: ``"files"`` (the parquet file stream source) or
     ``"py_datasource"`` (the registered Spark 4 Python Data Source,
     ``sources/py_datasource.py`` — row-position offsets over the same
     arrival-ordered log, ``filesPerBatch`` mirroring
     ``maxFilesPerTrigger`` so the micro-batch boundaries are identical).
-    The py source's rate limit lives in ``latestOffset``, which
-    ``Trigger.AvailableNow`` snapshots ONCE as the final end — a
-    one-shot drain through it must use the default trigger +
-    ``processAllAvailable`` (see ``run_pipeline_to_completion``), not
-    ``available_now=True``.
 
-    Gold-layer queries (``GOLD_LAYER``) read silver's committed deltas
-    and start silver with them. They always run the default trigger:
-    their pace is set by silver's commits (one per gold batch), and a
+    ``trigger_interval`` (a processing-time interval; None runs the
+    default trigger) paces the queries reading bronze. Gold-layer
+    queries (``GOLD_LAYER``) read silver's committed deltas and start
+    silver with them. They always run the default trigger: their pace
+    is set by silver's commits (one per gold batch), and a
     ``trigger_interval`` would cap them at one silver commit per
-    interval, so a gold query behind silver could never catch up. Never
-    ``Trigger.AvailableNow``, which would snapshot silver's commits
-    once, before silver has written them; ``run_pipeline_to_completion``
-    drains them."""
-    if source_format == "py_datasource" and available_now:
-        raise ValueError(
-            "py_datasource + Trigger.AvailableNow under-drains: the "
-            "trigger snapshots the rate-limited latestOffset once; use "
-            "the default trigger and processAllAvailable instead"
-        )
-    gold = sorted(set(queries) & GOLD_LAYER)
-    if available_now and gold:
-        raise ValueError(
-            f"Trigger.AvailableNow under-drains the gold-layer queries {gold}: "
-            "the trigger snapshots silver's commits once, before silver has "
-            "written them; drain with run_pipeline_to_completion instead"
-        )
+    interval, so a gold query behind silver could never catch up."""
     return _start_queries(
         spark, source_dir, work_dir, queries, watermark, max_files_per_trigger,
-        available_now, trigger_interval, source_format,
+        False, trigger_interval, source_format,
     )
 
 
@@ -432,12 +427,17 @@ def _start_queries(
     trigger_interval: str | None,
     source_format: str,
 ) -> PipelineHandles:
-    """``start_pipeline`` past its trigger guards: ``available_now``
-    applies to the queries reading bronze only."""
+    """Start ``queries`` (see ``start_pipeline``). ``available_now``,
+    set only by ``run_pipeline_to_completion`` for the file source, runs
+    the queries reading bronze under ``Trigger.AvailableNow``. Never the
+    gold layer: the trigger would snapshot silver's commits once, before
+    silver has written them. Never the Python Data Source: its rate
+    limit lives in ``latestOffset``, which the trigger snapshots once as
+    the final end."""
     # fail loudly on a name no branch below will start: a typo'd query
     # would otherwise be silently skipped while the caller believes its
     # table is produced
-    known = {*GOLD_LAYER, *FOLDS, "silver", "features", "role_runs", "tool_asof"}
+    known = {*GOLD_LAYER, *FOLDS, *KEYED_STATE, "silver"}
     unknown = [q for q in queries if q not in known]
     if unknown:
         raise ValueError(
@@ -535,42 +535,14 @@ def _start_queries(
             extra_sinks=member_sinks("silver"), lineage=True,
         )
 
-    if "features" in queries:
-        from ..functions.cleansing import cleanse_turns
-        from .stateful import conv_features_stream
-
-        cleansed = cleanse_turns(src()).withWatermark("ts", watermark)
-        sink = ParquetMergeSink(table("features"), ["conv_id", "turn_idx"], None)
-        h.sinks["features"] = sink
-        h.queries["features"] = _start(
-            conv_features_stream(cleansed),
-            sink, "features", ckpt("features"), "append", available_now, trigger_interval,
-        )
-
-    if "role_runs" in queries:
-        from ..functions.cleansing import cleanse_turns
-        from .stateful_runs import role_runs_stream
-
-        cleansed = cleanse_turns(src()).withWatermark("ts", watermark)
-        sink = ParquetMergeSink(table("role_runs"), ["conv_id", "run_start_turn"], None)
-        h.sinks["role_runs"] = sink
-        h.queries["role_runs"] = _start(
-            role_runs_stream(cleansed, role="user", min_run=2),
-            sink, "role_runs", ckpt("role_runs"), "append", available_now,
-            trigger_interval,
-        )
-
-    if "tool_asof" in queries:
-        from ..functions.cleansing import cleanse_turns
-        from .stateful_asof import tool_asof_stream
-
-        cleansed = cleanse_turns(src()).withWatermark("ts", watermark)
-        sink = ParquetMergeSink(table("tool_asof"), ["conv_id", "turn_idx"], None)
-        h.sinks["tool_asof"] = sink
-        h.queries["tool_asof"] = _start(
-            tool_asof_stream(cleansed),
-            sink, "tool_asof", ckpt("tool_asof"), "append", available_now,
-            trigger_interval,
+    for name, (keys, plan) in KEYED_STATE.items():
+        if name not in queries:
+            continue
+        sink = ParquetMergeSink(table(name), keys, None)
+        h.sinks[name] = sink
+        h.queries[name] = _start(
+            plan(cleanse_turns(src()).withWatermark("ts", watermark)),
+            sink, name, ckpt(name), "append", available_now, trigger_interval,
         )
 
     # ---- gold layer: silver's committed deltas, one per trigger -------
@@ -705,7 +677,7 @@ def run_pipeline_to_completion(
          Data Source (``source_format="py_datasource"``) under the
          default trigger + ``processAllAvailable`` — its rate limit
          lives in ``latestOffset``, which AvailableNow snapshots once
-         (see ``start_pipeline``);
+         (see ``_start_queries``);
       3. ``processAllAvailable`` on each gold-layer query, which then
          has every silver commit to read, then stop them all.
     Both formats run the post-watermark flush batches

@@ -706,9 +706,6 @@ class CountMinSink(ParquetMergeSink):
         compaction + newer deltas on top stays exact."""
         return df.groupBy("row", "col").agg(F.sum("count").alias("count"))
 
-    def _read_from_paths(self, spark: SparkSession, paths: list[str]) -> DataFrame:
-        return self._compact_frame(self._reader(spark).parquet(*paths))
-
 
 class HllSink(ParquetMergeSink):
     """HyperLogLog register sink: per-batch deltas are register frames
@@ -755,9 +752,6 @@ class HllSink(ParquetMergeSink):
         compaction, newer deltas on top, and replays all stay exact."""
         return df.groupBy("bucket").agg(F.max("rho").alias("rho"))
 
-    def _read_from_paths(self, spark: SparkSession, paths: list[str]) -> DataFrame:
-        return self._compact_frame(self._reader(spark).parquet(*paths))
-
 
 class HistogramSink(ParquetMergeSink):
     """Fixed-bin histogram sink: per-batch deltas are (bin, count)
@@ -799,9 +793,6 @@ class HistogramSink(ParquetMergeSink):
         snapshot compaction + newer deltas on top stays exact."""
         return df.groupBy("bin").agg(F.sum("count").alias("count"))
 
-    def _read_from_paths(self, spark: SparkSession, paths: list[str]) -> DataFrame:
-        return self._compact_frame(self._reader(spark).parquet(*paths))
-
 
 class WindowedHllSink(ParquetMergeSink):
     """Per-event-time-window HLL registers: deltas are
@@ -839,6 +830,3 @@ class WindowedHllSink(ParquetMergeSink):
         return df.groupBy("window_start", "bucket").agg(
             F.max("rho").alias("rho")
         )
-
-    def _read_from_paths(self, spark: SparkSession, paths: list[str]) -> DataFrame:
-        return self._compact_frame(self._reader(spark).parquet(*paths))

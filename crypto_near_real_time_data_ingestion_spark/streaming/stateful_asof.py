@@ -4,8 +4,8 @@ The batch ``operators/asof.turn_tool_asof`` (union-merge, one shuffle)
 re-expressed as keyed streaming state — the TEMPORAL-join member of the
 stateful-operator family (features = aggregates, runs = CEP, this =
 as-of). Spark's native stream-stream join cannot express as-of ("latest
-right ≤ t", an ordered, non-equi, last-wins match), so it rides the
-watermark-ordered emission discipline of ``streaming/stateful.py``:
+right ≤ t", an ordered, non-equi, last-wins match), so it is a kernel
+of the watermark-ordered keyed-state driver (``streaming/stateful.py``):
 
   * turns buffer in keyed state until the watermark passes their event
     time (late arrivals within the watermark slot into their correct
@@ -17,26 +17,20 @@ watermark-ordered emission discipline of ``streaming/stateful.py``:
     ordering (right side sorts before left at equal time) and DuckDB's
     ``ASOF LEFT JOIN`` on the pre-uniqued right side;
   * the only cross-turn state the match needs is the LATEST tool call
-    seen — three scalars, O(1), plus the watermark-horizon buffer and
-    the emitted-turn dedup set (in-state exact dedup, since Spark
-    disallows a second stateful operator upstream in the same chain).
+    seen — three scalars, O(1), beside the driver's watermark-horizon
+    buffer and emitted-turn dedup set.
 
-State is O(watermark horizon) per conversation regardless of stream
-length; eviction fires once the watermark is ``CLOSE_GAP_S`` past the
-last activity (event-time timeout), like the run detector's.
+State is evicted once the watermark is ``CLOSE_GAP_S`` past the last
+activity, like the run detector's.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-CLOSE_GAP_S = 3600
+from .stateful import CLOSE_GAP_S, Kernel, keyed_stream
 
 ASOF_OUTPUT_SCHEMA = T.StructType(
     [
@@ -50,31 +44,18 @@ ASOF_OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-ASOF_STATE_SCHEMA = T.StructType(
+# latest tool call visible to future turns (us == -1 -> none yet)
+ASOF_CARRY = T.StructType(
     [
-        T.StructField("buf_turn_idx", T.ArrayType(T.IntegerType())),
-        T.StructField("buf_ts_us", T.ArrayType(T.LongType())),
-        T.StructField("buf_role", T.ArrayType(T.StringType())),
-        T.StructField("buf_tool", T.ArrayType(T.StringType())),  # '' = no tool
-        T.StructField("emitted_turn_idx", T.ArrayType(T.IntegerType())),
-        # latest tool call visible to future turns (us == -1 -> none yet)
         T.StructField("tool_ts_us", T.LongType()),
         T.StructField("tool_turn_idx", T.IntegerType()),
         T.StructField("tool_used", T.StringType()),
-        T.StructField("last_ts_us", T.LongType()),
     ]
 )
 
-_EMPTY = ([], [], [], [], [], -1, -1, "", -1)
 
-
-def _asof_step(
-    conv_id: str,
-    pdf_iter: Iterator[pd.DataFrame],
-    st: tuple,
-    wm_us: int,
-) -> tuple[pd.DataFrame | None, tuple | None, int | None]:
-    """Pure ingest+match core (same contract as ``stateful._step``).
+def _asof_emit(rows, _last_ts, carry):
+    """As-of match of the emittable turns.
 
     Fully vectorized: unlike the run detector and the percentile state
     (whose emission is inherently sequential per key), the as-of match
@@ -84,137 +65,50 @@ def _asof_step(
     makes lexicographic (ts, turn_idx) max == positional max), capped
     against the carried-in latest-tool state.
     """
-    (
-        buf_ti, buf_ts, buf_role, buf_tool, emitted_ti,
-        tool_us, tool_ti, tool_used, last_ts,
-    ) = st
-    buf_ti, buf_ts = list(buf_ti), list(buf_ts)
-    buf_role, buf_tool = list(buf_role), list(buf_tool)
-    emitted_set = set(emitted_ti)
+    e_ti, e_ts, e_role, e_tool = rows
+    tool_us, tool_ti, tool_used = carry
+    has_tool = e_tool != ""
+    # highest-index tool row at or before each position
+    tool_pos = np.where(has_tool, np.arange(len(e_ti)), -1)
+    cummax = np.maximum.accumulate(tool_pos)
+    # a turn sees every tool in its own ts group (<= semantics):
+    # look up the cummax at the group END, not at the row itself
+    grp_end = np.searchsorted(e_ts, e_ts, side="right") - 1
+    vis = cummax[grp_end]
+    visc = np.clip(vis, 0, None)
+    bts, bti = e_ts[visc], e_ti[visc]
+    # batch candidate vs carried-in latest: lexicographic (ts, ti)
+    batch_wins = (vis >= 0) & ((bts > tool_us) | ((bts == tool_us) & (bti > tool_ti)))
+    a_ts = np.where(batch_wins, bts, tool_us)
+    none = a_ts < 0
+    cols = (
+        e_ti, e_ts, e_role,
+        np.where(none, None, a_ts),
+        np.where(none, None, np.where(batch_wins, bti, tool_ti)),
+        np.where(none, None, np.where(batch_wins, e_tool[visc], tool_used)),
+    )
+    # carry the overall latest tool forward (last tool row wins)
+    lt = int(cummax[-1])
+    if lt >= 0 and (int(e_ts[lt]), int(e_ti[lt])) > (tool_us, tool_ti):
+        carry = (int(e_ts[lt]), int(e_ti[lt]), str(e_tool[lt]))
+    return cols, carry
 
-    # vectorized ingest (np.unique first-occurrence + isin vs known set)
-    emitted_arr = np.fromiter(emitted_set, dtype=np.int64, count=len(emitted_set))
-    for pdf in pdf_iter:
-        if len(pdf) == 0:
-            continue
-        ti = pdf["turn_idx"].to_numpy()
-        ts = pdf["ts"].astype("datetime64[us]").astype("int64").to_numpy()
-        role = pdf["role"].to_numpy()
-        tool = pdf["tool"].fillna("").to_numpy()
-        known = emitted_arr
-        if buf_ti:
-            known = np.concatenate([known, np.asarray(buf_ti, dtype=np.int64)])
-        uniq, first_idx = np.unique(ti, return_index=True)
-        sel = first_idx[~np.isin(uniq, known)]
-        buf_ti.extend(np.asarray(ti[sel]).tolist())
-        buf_ts.extend(np.asarray(ts[sel]).tolist())
-        buf_role.extend(np.asarray(role[sel]).tolist())
-        buf_tool.extend(np.asarray(tool[sel]).tolist())
 
-    out: pd.DataFrame | None = None
-    if buf_ti:
-        ti_a = np.asarray(buf_ti, dtype=np.int64)
-        ts_a = np.asarray(buf_ts, dtype=np.int64)
-        role_a = np.asarray(buf_role, dtype=object)
-        tool_a = np.asarray(buf_tool, dtype=object)
-        order = np.lexsort((ti_a, ts_a))
-        ti_a, ts_a = ti_a[order], ts_a[order]
-        role_a, tool_a = role_a[order], tool_a[order]
-        # sorted by ts → the emittable rows are exactly the prefix.
-        # side='left': only ts < wm is definite (Spark drops late rows
-        # strictly below the watermark, so a ts == wm tool row may
-        # still arrive and would be a turn's tied as-of match)
-        n_emit = int(np.searchsorted(ts_a, wm_us, side="left"))
-        if n_emit:
-            e_ti, e_ts = ti_a[:n_emit], ts_a[:n_emit]
-            e_role, e_tool = role_a[:n_emit], tool_a[:n_emit]
-            has_tool = e_tool != ""
-            # highest-index tool row at or before each position
-            tool_pos = np.where(has_tool, np.arange(n_emit), -1)
-            cummax = np.maximum.accumulate(tool_pos)
-            # a turn sees every tool in its own ts group (<= semantics):
-            # look up the cummax at the group END, not at the row itself
-            grp_end = np.searchsorted(e_ts, e_ts, side="right") - 1
-            vis = cummax[grp_end]
-            visc = np.clip(vis, 0, None)
-            bts, bti = e_ts[visc], e_ti[visc]
-            # batch candidate vs carried-in latest: lexicographic (ts, ti)
-            batch_wins = (vis >= 0) & (
-                (bts > tool_us) | ((bts == tool_us) & (bti > tool_ti))
-            )
-            a_ts = np.where(batch_wins, bts, tool_us)
-            a_ti = np.where(batch_wins, bti, tool_ti)
-            a_used = np.where(batch_wins, e_tool[visc], tool_used)
-            none_mask = a_ts < 0
-            out = pd.DataFrame(
-                {
-                    "conv_id": np.repeat(conv_id, n_emit),
-                    "turn_idx": e_ti,
-                    "ts": pd.to_datetime(e_ts, unit="us"),
-                    "role": e_role,
-                    "asof_ts": pd.to_datetime(np.where(none_mask, 0, a_ts), unit="us"),
-                    "asof_tool_turn_idx": a_ti.astype(object),
-                    "asof_tool_used": a_used,
-                }
-            )
-            if none_mask.any():
-                out.loc[none_mask, "asof_ts"] = None
-                out.loc[none_mask, "asof_tool_turn_idx"] = None
-                out.loc[none_mask, "asof_tool_used"] = None
-            # carry the overall latest tool forward (last tool row wins)
-            lt = int(cummax[-1])
-            if lt >= 0:
-                c = (int(e_ts[lt]), int(e_ti[lt]))
-                if c > (tool_us, tool_ti):
-                    tool_us, tool_ti = c
-                    tool_used = str(e_tool[lt])
-            last_ts = int(e_ts[-1])
-            emitted_set.update(e_ti.tolist())
-        buf_ti = ti_a[n_emit:].tolist()
-        buf_ts = ts_a[n_emit:].tolist()
-        buf_role = role_a[n_emit:].tolist()
-        buf_tool = tool_a[n_emit:].tolist()
-
-    if buf_ti:
-        new_state = (
-            buf_ti, buf_ts, buf_role, buf_tool, sorted(emitted_set),
-            tool_us, tool_ti, tool_used, last_ts,
-        )
-        timer = max(min(buf_ts) // 1000 + 1, wm_us // 1000 + 1)
-        return out, new_state, timer
-    if last_ts >= 0:
-        if wm_us > last_ts + CLOSE_GAP_S * 1_000_000:
-            return out, None, None
-        new_state = (
-            [], [], [], [], sorted(emitted_set),
-            tool_us, tool_ti, tool_used, last_ts,
-        )
-        timer = max(last_ts // 1000 + CLOSE_GAP_S * 1000, wm_us // 1000 + 1)
-        return out, new_state, timer
-    return out, None, None
+# the as-of kernel: buffers each turn's role and tool ('' = no tool)
+ASOF_KERNEL = Kernel(
+    output=ASOF_OUTPUT_SCHEMA,
+    payload=(
+        (T.StructField("role", T.StringType()), lambda s: s.to_numpy(dtype=object)),
+        (T.StructField("tool", T.StringType()), lambda s: s.fillna("").to_numpy(dtype=object)),
+    ),
+    carry=ASOF_CARRY,
+    carry0=(-1, -1, ""),
+    emit=_asof_emit,
+    horizon_s=CLOSE_GAP_S,
+)
 
 
 def tool_asof_stream(silver_stream: DataFrame) -> DataFrame:
     """Apply the streaming as-of operator to a cleansed, watermarked
     stream (NOT deduped upstream — dedup happens in-state)."""
-
-    def fn(key, pdf_iter, state: GroupState):
-        (conv_id,) = key
-        st = state.get if state.exists else _EMPTY
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        out, new_state, timer = _asof_step(conv_id, pdf_iter, st, wm_us)
-        if new_state is not None:
-            state.update(new_state)
-            state.setTimeoutTimestamp(timer)
-        elif state.exists:
-            state.remove()
-        if out is not None and len(out):
-            yield out
-
-    return silver_stream.groupBy("conv_id").applyInPandasWithState(
-        fn,
-        outputStructType=ASOF_OUTPUT_SCHEMA,
-        stateStructType=ASOF_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+    return keyed_stream(silver_stream, ASOF_KERNEL)

@@ -6,7 +6,7 @@ as-of joins) — a drain of this operator over the same events is
 bit-equal to it (``tests/test_streaming_funnel.py``), so the batch
 DuckDB funnel oracle transfers.
 
-Same watermark-ordered emission discipline as ``stateful_runs.py``:
+Same watermark-ordered emission discipline as ``stateful.py``'s driver:
 arriving events buffer in keyed state; once the watermark passes an
 event's time it is fed — in strict (ts, event_id) order — into the
 funnel matcher. Every step-0 event opens an ANCHOR; an anchor at step i

@@ -2,25 +2,22 @@
 same-role turns (the ``R{k,}`` pattern), per conversation.
 
 Batch twin: ``plans/patterns.role_runs`` (gap-and-island) — this
-operator answers the SAME DuckDB oracle after a drain. The streaming
-form rides the watermark-ordered emission discipline of
-``streaming/stateful.py``: arriving turns buffer in keyed state; once
-the watermark passes a turn's event time it is fed — in strict
-(ts, turn_idx) order — into the run accumulator, so late arrivals
-within the watermark land in their correct sequence position BEFORE
-pattern matching, and a run is emitted exactly once, when it is
+operator answers the SAME DuckDB oracle after a drain. It is a kernel of
+the watermark-ordered keyed-state driver (``streaming/stateful.py``):
+once the watermark passes a turn's event time the turn is fed — in
+strict (ts, turn_idx) order — into the run accumulator, so late
+arrivals within the watermark land in their correct sequence position
+BEFORE pattern matching, and a run is emitted exactly once, when it is
 DEFINITELY closed:
 
   * a watermark-ordered turn of a different role arrives (mid-stream
     closure), or
-  * the conversation evicts (event-time timeout far past last
-    activity) and the still-open run flushes.
+  * the conversation evicts (event-time timeout ``CLOSE_GAP_S`` past
+    last activity) and the still-open run flushes.
 
-State per key: the not-yet-watermarked turn buffer (bounded by the
-watermark horizon) + the open run's 6 scalars + the emitted-turn dedup
-set — O(horizon), not O(stream). Exact dedup happens in-state (Spark
-disallows a second stateful operator upstream of
-``applyInPandasWithState`` in one chain).
+The kernel buffers each turn's role (O(horizon)) and carries the open
+run's 6 scalars (O(1)); the driver's dedup set is O(turns per
+conversation).
 
 This is the MATCH_RECOGNIZE-style pattern operator the north rule's
 "CEP" asks for, expressed as keyed state + event-time timers rather
@@ -30,15 +27,11 @@ than an NFA — for fixed patterns like ``R{k,}`` the accumulator IS the
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-CLOSE_GAP_S = 3600  # evict (and flush the open run) once wm is this far past
+from .stateful import CLOSE_GAP_S, Kernel, keyed_stream
 
 RUNS_OUTPUT_SCHEMA = T.StructType(
     [
@@ -51,144 +44,63 @@ RUNS_OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-RUNS_STATE_SCHEMA = T.StructType(
+# the open run (role '' == none)
+RUNS_CARRY = T.StructType(
     [
-        T.StructField("buf_turn_idx", T.ArrayType(T.IntegerType())),
-        T.StructField("buf_ts_us", T.ArrayType(T.LongType())),
-        T.StructField("buf_role", T.ArrayType(T.StringType())),
-        T.StructField("emitted_turn_idx", T.ArrayType(T.IntegerType())),
-        # open run accumulator (role '' == none)
         T.StructField("run_role", T.StringType()),
         T.StructField("run_start_turn", T.IntegerType()),
         T.StructField("run_end_turn", T.IntegerType()),
         T.StructField("run_len", T.LongType()),
         T.StructField("run_start_us", T.LongType()),
         T.StructField("run_end_us", T.LongType()),
-        T.StructField("last_ts_us", T.LongType()),
     ]
 )
 
-_EMPTY = ([], [], [], [], "", -1, -1, 0, -1, -1, -1)
 
+def runs_kernel(target_role: str = "user", min_run: int = 2) -> Kernel:
+    """The run detector's kernel: buffers each turn's role, emits the
+    runs of ``target_role`` at least ``min_run`` long."""
 
-def _runs_step(
-    conv_id: str,
-    pdf_iter: Iterator[pd.DataFrame],
-    st: tuple,
-    wm_us: int,
-    target_role: str,
-    min_run: int,
-) -> tuple[list[tuple], tuple | None, int | None]:
-    """Pure ingest+match core (same contract as ``stateful._step``):
-    returns (closed_runs, new_state | None-to-evict, timer_ms | None)."""
-    (
-        buf_ti, buf_ts, buf_role, emitted_ti,
-        r_role, r_start, r_end, r_len, r_start_us, r_end_us, last_ts,
-    ) = st
-    buf_ti, buf_ts, buf_role = list(buf_ti), list(buf_ts), list(buf_role)
-    emitted_set = set(emitted_ti)
+    def emit(rows, _last_ts, carry):
+        e_ti, e_ts, e_role = rows
+        n = len(e_ti)
+        # gap-and-islands, vectorized: segment starts at role changes
+        change = np.flatnonzero(e_role[1:] != e_role[:-1]) + 1
+        starts = np.concatenate([[0], change])
+        ends = np.concatenate([change, [n]])  # exclusive
+        # one column per carry field, one entry per segment
+        seg = [
+            e_role[starts], e_ti[starts], e_ti[ends - 1], ends - starts,
+            e_ts[starts], e_ts[ends - 1],
+        ]
+        r_role, r_start, _, r_len, r_start_us, _ = carry
+        if r_role and seg[0][0] == r_role:
+            # carry-in open run continues into segment 0
+            seg[1][0], seg[3][0], seg[4][0] = r_start, seg[3][0] + r_len, r_start_us
+        elif r_role:
+            # segment 0 broke the open run: it is closed, ahead of it
+            seg = [np.concatenate([[c], s]) for c, s in zip(carry, seg)]
+        # every segment but the last is closed (a different-role turn
+        # follows it in watermark order); the last becomes the open run
+        closed = (seg[0][:-1] == target_role) & (seg[3][:-1] >= min_run)
+        cols = tuple(s[:-1][closed] for s in seg[1:])  # per closed RUN, not per turn
+        return cols, (str(seg[0][-1]), *(int(s[-1]) for s in seg[1:]))
 
-    # vectorized ingest (np.unique first-occurrence + isin vs known set —
-    # same shape as stateful.py / stateful_asof.py)
-    emitted_arr = np.fromiter(emitted_set, dtype=np.int64, count=len(emitted_set))
-    for pdf in pdf_iter:
-        if len(pdf) == 0:
-            continue
-        ti = pdf["turn_idx"].to_numpy()
-        ts = pdf["ts"].astype("datetime64[us]").astype("int64").to_numpy()
-        role = pdf["role"].to_numpy()
-        known = emitted_arr
-        if buf_ti:
-            known = np.concatenate([known, np.asarray(buf_ti, dtype=np.int64)])
-        uniq, first_idx = np.unique(ti, return_index=True)
-        sel = first_idx[~np.isin(uniq, known)]
-        buf_ti.extend(np.asarray(ti[sel]).tolist())
-        buf_ts.extend(np.asarray(ts[sel]).tolist())
-        buf_role.extend(np.asarray(role[sel]).tolist())
+    def flush(carry):
+        # conversation over: the open run closes
+        r_role, *run = carry
+        rows = [run] if r_role == target_role and run[2] >= min_run else []
+        return tuple(np.array(rows, dtype=np.int64).reshape(-1, len(run)).T)
 
-    out: list[tuple] = []
-
-    def close_run() -> None:
-        if r_role == target_role and r_len >= min_run:
-            out.append((conv_id, r_start, r_end, r_len, r_start_us, r_end_us))
-
-    if buf_ti:
-        ti_a = np.asarray(buf_ti, dtype=np.int64)
-        ts_a = np.asarray(buf_ts, dtype=np.int64)
-        role_a = np.asarray(buf_role, dtype=object)
-        order = np.lexsort((ti_a, ts_a))
-        ti_a, ts_a, role_a = ti_a[order], ts_a[order], role_a[order]
-        # sorted by ts → the emittable rows are exactly the prefix.
-        # side='left': only ts < wm is definite (Spark drops late rows
-        # strictly below the watermark, so a ts == wm row may still
-        # arrive and could extend/break a run at the tie)
-        n_emit = int(np.searchsorted(ts_a, wm_us, side="left"))
-        if n_emit:
-            e_ti, e_ts = ti_a[:n_emit], ts_a[:n_emit]
-            e_role = role_a[:n_emit]
-            # gap-and-islands, vectorized: segment starts at role changes
-            change = (np.flatnonzero(e_role[1:] != e_role[:-1]) + 1).astype(np.int64)
-            starts = np.concatenate([np.zeros(1, np.int64), change])
-            ends = np.concatenate([change, np.full(1, n_emit, np.int64)])  # exclusive
-            seg_role = e_role[starts]
-            seg_len = (ends - starts).astype(np.int64)
-            seg_start_ti, seg_end_ti = e_ti[starts], e_ti[ends - 1]
-            seg_start_us, seg_end_us = e_ts[starts], e_ts[ends - 1]
-            if r_role and seg_role[0] == r_role:
-                # carry-in open run continues into segment 0
-                seg_len[0] += r_len
-                seg_start_ti[0], seg_start_us[0] = r_start, r_start_us
-            elif r_role:
-                close_run()  # definitively closed: segment 0 broke it
-            # every segment but the last is closed (a different-role turn
-            # follows it in watermark order); the last becomes the open run
-            n_seg = len(seg_role)
-            closed = np.flatnonzero(
-                (seg_role[: n_seg - 1] == target_role)
-                & (seg_len[: n_seg - 1] >= min_run)
-            )
-            out.extend(
-                (
-                    conv_id,
-                    int(seg_start_ti[i]), int(seg_end_ti[i]), int(seg_len[i]),
-                    int(seg_start_us[i]), int(seg_end_us[i]),
-                )
-                for i in closed  # per closed RUN, not per turn
-            )
-            r_role, r_len = str(seg_role[-1]), int(seg_len[-1])
-            r_start, r_end = int(seg_start_ti[-1]), int(seg_end_ti[-1])
-            r_start_us, r_end_us = int(seg_start_us[-1]), int(seg_end_us[-1])
-            last_ts = int(e_ts[-1])
-            emitted_set.update(e_ti.tolist())
-        buf_ti = ti_a[n_emit:].tolist()
-        buf_ts = ts_a[n_emit:].tolist()
-        buf_role = role_a[n_emit:].tolist()
-
-    if buf_ti:
-        new_state = (
-            buf_ti, buf_ts, buf_role, sorted(emitted_set),
-            r_role, r_start, r_end, r_len, r_start_us, r_end_us, last_ts,
-        )
-        timer = max(min(buf_ts) // 1000 + 1, wm_us // 1000 + 1)
-        return out, new_state, timer
-    if last_ts >= 0:
-        if wm_us > last_ts + CLOSE_GAP_S * 1_000_000:
-            close_run()  # conversation over: flush the open run, evict
-            return out, None, None
-        new_state = (
-            [], [], [], sorted(emitted_set),
-            r_role, r_start, r_end, r_len, r_start_us, r_end_us, last_ts,
-        )
-        timer = max(last_ts // 1000 + CLOSE_GAP_S * 1000, wm_us // 1000 + 1)
-        return out, new_state, timer
-    return out, None, None
-
-
-def _rows_to_pdf(rows: list[tuple]) -> pd.DataFrame:
-    out = pd.DataFrame(rows, columns=[f.name for f in RUNS_OUTPUT_SCHEMA.fields])
-    out["run_start_ts"] = pd.to_datetime(out["run_start_ts"], unit="us")
-    out["run_end_ts"] = pd.to_datetime(out["run_end_ts"], unit="us")
-    return out
+    return Kernel(
+        output=RUNS_OUTPUT_SCHEMA,
+        payload=((T.StructField("role", T.StringType()), lambda s: s.to_numpy(dtype=object)),),
+        carry=RUNS_CARRY,
+        carry0=("", -1, -1, 0, -1, -1),
+        emit=emit,
+        horizon_s=CLOSE_GAP_S,
+        flush=flush,
+    )
 
 
 def role_runs_stream(
@@ -196,26 +108,4 @@ def role_runs_stream(
 ) -> DataFrame:
     """Apply the streaming run detector to a cleansed, watermarked stream
     (NOT deduped upstream — dedup happens in-state)."""
-
-    def fn(key, pdf_iter, state: GroupState):
-        (conv_id,) = key
-        st = state.get if state.exists else _EMPTY
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        out, new_state, timer = _runs_step(
-            conv_id, pdf_iter, st, wm_us, role, min_run
-        )
-        if new_state is not None:
-            state.update(new_state)
-            state.setTimeoutTimestamp(timer)
-        elif state.exists:
-            state.remove()
-        if out:
-            yield _rows_to_pdf(out)
-
-    return silver_stream.groupBy("conv_id").applyInPandasWithState(
-        fn,
-        outputStructType=RUNS_OUTPUT_SCHEMA,
-        stateStructType=RUNS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
+    return keyed_stream(silver_stream, runs_kernel(role, min_run))

@@ -17,31 +17,22 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import types as T
 
-from crypto_near_real_time_data_ingestion_spark.streaming.stateful_asof import (
-    _EMPTY as ASOF_EMPTY,
-)
-from crypto_near_real_time_data_ingestion_spark.streaming.stateful_asof import (
+from crypto_near_real_time_data_ingestion_spark.streaming.stateful import (
     CLOSE_GAP_S,
-    _asof_step,
-)
-from crypto_near_real_time_data_ingestion_spark.streaming.stateful import (
-    _EMPTY as FEAT_EMPTY,
-)
-from crypto_near_real_time_data_ingestion_spark.streaming.stateful import (
     _columns,
     _input_frame,
+    _out_frame,
     _process_bucket,
     _step,
+    features_kernel,
 )
-from crypto_near_real_time_data_ingestion_spark.streaming.stateful_runs import (
-    _EMPTY as RUNS_EMPTY,
-)
-from crypto_near_real_time_data_ingestion_spark.streaming.stateful_runs import (
-    _runs_step,
-)
+from crypto_near_real_time_data_ingestion_spark.streaming.stateful_asof import ASOF_KERNEL
+from crypto_near_real_time_data_ingestion_spark.streaming.stateful_runs import runs_kernel
 
 US = 1_000_000
 FAR = 10**15  # watermark "infinity": flushes every buffer and eviction timer
@@ -115,25 +106,32 @@ def _pdf(batch):
     return d
 
 
-def _drive_asof(batches):
+def _drive(k, batches, flush_wm):
+    """``_step`` of one conversation over the batches under their
+    watermark schedule, then one input-less step at ``flush_wm``;
+    returns the output column tuples."""
     # None mirrors "no state row exists": Spark then skips the group on
-    # an input-less micro-batch and hands the fn _EMPTY otherwise.
+    # an input-less micro-batch and hands the fn the empty state otherwise.
     st_ = None
     out = []
     for batch, wm in zip(batches, _wm_schedule(batches)):
         if st_ is None and not batch:
             continue
-        o, st_, _ = _asof_step(
-            "c", iter([_pdf(batch)]), st_ if st_ is not None else ASOF_EMPTY, wm
+        o, st_, _ = _step(
+            k, "c", _columns(k, _input_frame(iter([_pdf(batch)]))),
+            st_ if st_ is not None else k.empty, wm,
         )
-        if o is not None:
-            out.append(o)
+        out.extend(o)
     if st_ is not None:  # final flush + eviction
-        o, st_, _ = _asof_step("c", iter([]), st_, FAR + 2 * CLOSE_GAP_S * US)
-        if o is not None:
-            out.append(o)
+        o, st_, _ = _step(k, "c", _columns(k, None), st_, flush_wm)
+        out.extend(o)
         assert st_ is None, "state must evict once the watermark passes"
-    return pd.concat(out, ignore_index=True) if out else pd.DataFrame()
+    return out
+
+
+def _drive_asof(batches):
+    out = _drive(ASOF_KERNEL, batches, FAR + 2 * CLOSE_GAP_S * US)
+    return _out_frame(ASOF_KERNEL, out) if out else pd.DataFrame()
 
 
 def _brute_asof(rows):
@@ -173,27 +171,8 @@ def test_asof_core_matches_brute_force(case):
 
 
 def _drive_runs(batches, target="user", min_run=2):
-    st_ = None
-    out = []
-    for batch, wm in zip(batches, _wm_schedule(batches)):
-        if st_ is None and not batch:
-            continue
-        o, st_, _ = _runs_step(
-            "c",
-            iter([_pdf(batch)]),
-            st_ if st_ is not None else RUNS_EMPTY,
-            wm,
-            target,
-            min_run,
-        )
-        out.extend(o)
-    if st_ is not None:
-        o, st_, _ = _runs_step(
-            "c", iter([]), st_, FAR + 2 * CLOSE_GAP_S * US, target, min_run
-        )
-        out.extend(o)
-        assert st_ is None
-    return sorted(out)
+    out = _drive(runs_kernel(target, min_run), batches, FAR + 2 * CLOSE_GAP_S * US)
+    return sorted(r for o in out for r in zip(*o))
 
 
 def _brute_runs(rows, target="user", min_run=2):
@@ -241,24 +220,11 @@ def _nn(v):
     return None if (isinstance(v, float) and np.isnan(v)) else v
 
 
+FEAT_KERNEL = features_kernel(FEAT_GAP_S)
+
+
 def _drive_features(batches):
-    st_ = None
-    rows_out = []
-    for batch, wm in zip(batches, _wm_schedule(batches)):
-        if st_ is None and not batch:
-            continue
-        o, st_, _ = _step(
-            "c",
-            *_columns(_input_frame(iter([_pdf(batch)]))),
-            st_ if st_ is not None else FEAT_EMPTY,
-            wm,
-            FEAT_GAP_S,
-        )
-        rows_out.extend(zip(*o))
-    if st_ is not None:
-        o, st_, _ = _step("c", *_columns(None), st_, FAR, FEAT_GAP_S)
-        rows_out.extend(zip(*o))
-        assert st_ is None, "state must evict once the watermark passes"
+    rows_out = [r for o in _drive(FEAT_KERNEL, batches, FAR) for r in zip(*o)]
     return sorted(
         (ti, ts, c, mti, rate, _nn(p50), _nn(p95), _nn(p99), roll, sid, ss)
         for (_c, ti, ts, c, mti, rate, p50, p95, p99, roll, sid, ss) in rows_out
@@ -310,9 +276,10 @@ def test_features_core_matches_brute_force(case):
     assert _drive_features(batches) == _brute_features(rows)
 
 
-# --- bucketed conv-features operator (stateful._process_bucket): several
-# conversations share ONE Spark state key. Driven through a fake
-# GroupState with Spark's EventTimeTimeout bookkeeping, it must give
+# --- bucketed keyed-state driver (stateful._process_bucket), under each
+# of its three kernels: several conversations share ONE Spark state
+# key. Driven through a fake GroupState with Spark's EventTimeTimeout
+# bookkeeping, it must give
 # every conversation exactly the _step calls a per-conversation key gets
 # under Spark's firing rule (data in the batch, or timer < watermark) —
 # same output rows, same per-conversation state, same timers.
@@ -355,27 +322,30 @@ def _bucket_pdf(batch):
     d = pd.DataFrame(batch, columns=["conv_id", "turn_idx", "ts", "role", "tool"])
     d["tool"] = d["tool"].replace("", None)
     d["ts"] = pd.to_datetime(d["ts"], unit="us")
-    return d[["conv_id", "turn_idx", "tool", "ts"]]
+    return d
 
 
 def _norm_rows(rows):
     return sorted(tuple(_nn(v) for v in r) for r in rows)
 
 
-def _frame_rows(pdf):
-    pdf = pdf.copy()
-    for c in ("as_of_ts", "session_start"):
-        pdf[c] = pdf[c].astype("datetime64[us]").astype("int64")
+def _frame_rows(k, pdf):
+    """Output frame rows with timestamps back in µs (None for NaT)."""
+    pdf = pdf.astype(object)
+    for f in k.output.fields:
+        if isinstance(f.dataType, T.TimestampType):
+            pdf[f.name] = [None if pd.isna(v) else v.value // 1000 for v in pdf[f.name]]
     return list(pdf.itertuples(index=False, name=None))
 
 
-def _drive_bucket_vs_per_conv(batches, wms):
+def _drive_bucket_vs_per_conv(k, batches, wms):
     """Run the same conversation-tagged batches through one bucket and
     through per-conversation ``_step`` keys; assert they agree after
-    every batch. Returns the per-batch {conv: timer_ms} of the bucket."""
+    every batch. Returns the bucket's per-batch {conv: timer_ms} and
+    its per-batch output rows."""
     state, bucket_timer = _FakeGroupState(), None
     ref: dict = {}  # conv → (state tuple, timer_ms)
-    timers_seen = []
+    timers_seen, rows_seen = [], []
     for batch, wm in zip(batches, wms):
         wm_ms = wm // 1000
         # per-conversation keys, Spark's rule: rows, or timer < watermark
@@ -384,10 +354,10 @@ def _drive_bucket_vs_per_conv(batches, wms):
         due = [c for c, (_, t) in ref.items() if c not in convs_with_rows and t < wm_ms]
         for c in convs_with_rows + due:
             rows = [r[1:] for r in batch if r[0] == c]
-            cols = _columns(_input_frame(iter([_pdf(rows)]))) if rows else _columns(None)
-            st_ = ref[c][0] if c in ref else FEAT_EMPTY
-            o, new_st, timer = _step(c, *cols, st_, wm, FEAT_GAP_S)
-            want.extend(zip(*o))
+            cols = _columns(k, _input_frame(iter([_pdf(rows)])) if rows else None)
+            st_ = ref[c][0] if c in ref else k.empty
+            o, new_st, timer = _step(k, c, cols, st_, wm)
+            want.extend(r for cols in o for r in zip(*cols))
             if new_st is None:
                 ref.pop(c, None)
             else:
@@ -398,8 +368,8 @@ def _drive_bucket_vs_per_conv(batches, wms):
         if batch or fire:
             state.begin(wm_ms)
             pdfs = iter([_bucket_pdf(batch)] if batch else [])
-            for out in _process_bucket(("b",), pdfs, state, FEAT_GAP_S):
-                got.extend(_frame_rows(out))
+            for out in _process_bucket(k, ("b",), pdfs, state):
+                got.extend(_frame_rows(k, out))
             bucket_timer = state.timeout
         assert _norm_rows(got) == _norm_rows(want)
         have = {}
@@ -411,8 +381,9 @@ def _drive_bucket_vs_per_conv(batches, wms):
             assert bucket_timer == min(timers)
         assert have == ref
         timers_seen.append({c: t for c, (_, t) in have.items()})
+        rows_seen.append(_norm_rows(got))
     assert not state.exists and not ref, "every conversation must evict"
-    return timers_seen
+    return timers_seen, rows_seen
 
 
 def _tagged_batches(cases, perm_seed):
@@ -432,22 +403,28 @@ def _tagged_batches(cases, perm_seed):
     return merged
 
 
+@pytest.mark.parametrize(
+    "k",
+    [FEAT_KERNEL, runs_kernel("user", 2), ASOF_KERNEL],
+    ids=["features", "role_runs", "tool_asof"],
+)
 @settings(max_examples=80, deadline=None)
 @given(
     st.lists(_turn_history(), min_size=2, max_size=4),
     st.integers(min_value=0, max_value=2**16),
 )
-def test_bucket_matches_per_conversation_keys(cases, perm_seed):
+def test_bucket_matches_per_conversation_keys(k, cases, perm_seed):
     merged = _tagged_batches([_scaled(c) for c in cases], perm_seed)
     wms = _wm_schedule([[r[1:] for r in b] for b in merged])
-    _drive_bucket_vs_per_conv(merged + [[]], wms + [FAR])
+    _drive_bucket_vs_per_conv(k, merged + [[]], wms + [FAR])
 
 
 def test_bucket_timer_tie_and_revival():
     """Planted: conversation A's own timer equals the watermark exactly
     (it must NOT run: Spark fires only on timer < watermark), then fires
     one batch later and evicts A, then a new A turn revives it with
-    fresh lifetime aggregates — while B's rows drive the watermark."""
+    fresh lifetime aggregates — while B's rows drive the watermark. The
+    same tie under the run detector holds back A's open-run flush."""
     m = 60 * US
     batches = [
         [("A", 0, 2 * m, "user", ""), ("B", 0, 2 * m, "user", "")],
@@ -458,7 +435,7 @@ def test_bucket_timer_tie_and_revival():
         [],
     ]
     wms = [2 * m, 3 * m, 8 * m, 9 * m, 10 * m, FAR]
-    timers = _drive_bucket_vs_per_conv(batches, wms)
+    timers, _ = _drive_bucket_vs_per_conv(FEAT_KERNEL, batches, wms)
     # A emitted at batch 2 and armed its eviction timer at last + 2*gap
     a_timer = (2 * m + 2 * FEAT_GAP_S * US) // 1000
     assert a_timer == wms[2] // 1000
@@ -466,6 +443,22 @@ def test_bucket_timer_tie_and_revival():
     assert timers[2]["A"] == a_timer  # tie: left alone, not re-armed
     assert "A" not in timers[3]  # fired below the watermark: evicted
     assert "A" in timers[4]  # revived by its new turn
+
+    # role_runs: A's open user run flushes when A's own eviction timer
+    # falls below the watermark, not at the tie
+    h = CLOSE_GAP_S * US
+    batches = [
+        [("A", 0, 2 * m, "user", ""), ("A", 1, 3 * m, "user", ""), ("B", 0, 2 * m, "user", "")],
+        [("B", 1, 5 * m, "assistant", "")],
+        [("B", 2, 3 * m + h, "assistant", "")],
+        [("B", 3, 4 * m + h, "user", "")],
+        [],
+    ]
+    wms = [2 * m, 5 * m, 3 * m + h, 4 * m + h, FAR]
+    timers, rows = _drive_bucket_vs_per_conv(runs_kernel("user", 2), batches, wms)
+    assert timers[1]["A"] == timers[2]["A"] == wms[2] // 1000
+    run = ("A", 0, 1, 2, 2 * m, 3 * m)
+    assert rows == [[], [], [], [run], []]
 
 
 # --- planted unit checks of the `_step` core ------------------------------
@@ -486,17 +479,17 @@ def _batch(ti_ts_tool):
 
 
 def _rows_step(conv_id, pdf_iter, st, wm_us, gap_s):
-    """``_step`` over an input-chunk iterator, output as row tuples."""
-    out, new_st, timer = _step(
-        conv_id, *_columns(_input_frame(pdf_iter)), st, wm_us, gap_s
-    )
-    return list(zip(*out)), new_st, timer
+    """Features ``_step`` over an input-chunk iterator, output as row
+    tuples."""
+    k = features_kernel(gap_s)
+    out, new_st, timer = _step(k, conv_id, _columns(k, _input_frame(pdf_iter)), st, wm_us)
+    return [r for cols in out for r in zip(*cols)], new_st, timer
 
 
 def test_step_core_buffers_until_watermark():
     """Rows past the watermark stay buffered with a wake-up timer;
     nothing is emitted."""
-    out, st, timer = _rows_step("c", _batch([(0, 10_000_000, None)]), FEAT_EMPTY, 0, 1800)
+    out, st, timer = _rows_step("c", _batch([(0, 10_000_000, None)]), FEAT_KERNEL.empty, 0, 1800)
     assert out == [] and st is not None
     assert timer == 10_000 + 1  # earliest buffered turn, ms
     # watermark passes → emit in order, dedup against emitted set
@@ -510,7 +503,7 @@ def test_step_core_buffers_until_watermark():
 
 def test_step_core_eviction():
     """Watermark far past last activity → state evicted (None)."""
-    out, st, _ = _rows_step("c", _batch([(0, 1_000_000, None)]), FEAT_EMPTY, 2_000_000, 1800)
+    out, st, _ = _rows_step("c", _batch([(0, 1_000_000, None)]), FEAT_KERNEL.empty, 2_000_000, 1800)
     assert len(out) == 1
     _, st2, timer = _rows_step("c", iter(()), st, 2_000_000 + 2 * 1800 * 1_000_000 + 1, 1800)
     assert st2 is None and timer is None
